@@ -8,7 +8,7 @@ but it is *unreliable* storage: blocks live on executors, an executor
 loss during a downstream stage fails the job instead of recomputing,
 and the blocks pin executor memory/disk until the RDD is GC'd. A 100 TB
 deployment wants the same call sites to write a *reliable* checkpoint
-(HDFS/object store) or a spillable persist instead.
+(HDFS/object store) instead.
 
 ``materialize(df)`` is that single knob. Backend selection (checked per
 call, so a long-lived session can switch):
@@ -19,10 +19,12 @@ call, so a long-lived session can switch):
   configured checkpoint dir (``SPARK_GRAFT_CHECKPOINT_DIR`` or an
   already-set ``SparkContext.setCheckpointDir``) — survives executor
   loss; the right production backend for corpus-sized intermediates.
-- ``SPARK_GRAFT_MATERIALIZE=persist``: ``persist(MEMORY_AND_DISK)`` +
-  an eager ``count()`` — keeps lineage (recompute on block loss) at the
-  cost of NOT truncating the plan; only appropriate where plan growth
-  is bounded. Blocks free on GC/unpersist like any cached frame.
+
+Both backends cut lineage, so every materialized frame is a checkpoint
+leaf: loop-carried call sites (``DataStream.iterate``, the pagerank and
+hits checkpoints, the bpe/wordpiece trainers) keep a bounded plan, and
+``ensure_parallelism``'s partition probe on a materialized frame runs no
+upstream stage. Any other value raises.
 
 Call sites use ``df.transform(materialize)`` so chained expressions read
 the same as the old ``.localCheckpoint(eager=True)`` suffix.
@@ -40,8 +42,8 @@ CHECKPOINT_DIR_ENV = "SPARK_GRAFT_CHECKPOINT_DIR"
 
 def materialize(df: DataFrame) -> DataFrame:
     """Eagerly materialize ``df`` and return a frame reading the stored
-    result (lineage truncated under the checkpoint backends). See module
-    docstring for backend selection."""
+    result, its lineage truncated. See module docstring for backend
+    selection."""
     backend = os.environ.get(BACKEND_ENV, "local").strip().lower() or "local"
     if backend == "local":
         return df.localCheckpoint(eager=True)
@@ -57,11 +59,6 @@ def materialize(df: DataFrame) -> DataFrame:
                 )
             sc.setCheckpointDir(target)
         return df.checkpoint(eager=True)
-    if backend == "persist":
-        out = df.persist()
-        out.count()
-        return out
     raise ValueError(
-        f"unknown {BACKEND_ENV}={backend!r}; expected local | reliable | "
-        "persist"
+        f"unknown {BACKEND_ENV}={backend!r}; expected local | reliable"
     )

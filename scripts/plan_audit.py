@@ -167,10 +167,13 @@ def audit_plan(plan: str) -> tuple[list[str], dict[str, int]]:
     # tokenize subtrees — the optimizer collapsed the token projection
     # into the UDF arg (filter-on-UDF-result shape), so tokenize
     # re-evaluates per lambda element in the writer thread (measured 8x
-    # on the bloom probe; fixed with asNondeterministic). Informational
-    # counter — nonzero values deserve a look.
+    # on the bloom probe; fixed with asNondeterministic). Nonzero values
+    # deserve a look; tests/test_plan_audit.py gates the bloom probe on it.
+    # The argument list spans lines: tokenize's trim set renders a raw
+    # newline.
     inlined = 0
-    for m in re.finditer(r"(?:ArrowEvalPython|BatchEvalPython) \[(.*)", plan):
+    for m in re.finditer(
+            r"(?:ArrowEvalPython|BatchEvalPython) \[(.*?)\], \[", plan, re.S):
         n = m.group(1).count("split(trim(")
         if n >= 2:
             inlined += 1
@@ -183,6 +186,12 @@ def audit_plan(plan: str) -> tuple[list[str], dict[str, int]]:
         # subtree that should be checkpointed once (informational).
         # BatchScan = DSv2 sources (sources_v2.py) — distributed scans too.
         "file_scans": plan.count("FileScan") + plan.count("BatchScan"),
+        # grouped / mapped pandas and Arrow nodes (MapInPandas,
+        # FlatMapGroupsInPandas, FlatMapCoGroupsInPandas, MapInArrow, ...)
+        "python_maps": len(re.findall(r"\w+In(?:Pandas|Arrow)", plan)),
+        # exchanges to ONE partition: a stage that runs as a single task
+        # at any core count
+        "single_partition": plan.count("SinglePartition"),
     }
     if inlined:
         info["py_arg_inlined_tokenize"] = inlined
@@ -206,6 +215,30 @@ def is_materialized(plan: str) -> bool:
         and "BatchScan" not in plan
         and "Scan org.apache.spark.sql.execution.python" not in plan
     )
+
+
+def audit_built(plan: str, stream_plans: list[str]) -> tuple[
+        str, list[str], dict[str, int]]:
+    """(bucket, flags, info) for one built query: its executed plan, plus
+    the last micro-batch plans of the streaming replays its build ran
+    (``streaming.core.STREAM_PLANS``). A memory-sink replay is judged by
+    its micro-batch plans; a batch result that also ran streams keeps its
+    own counters and takes the streams' flags."""
+    if is_materialized(plan):
+        if not stream_plans:
+            return "materialized", [], {}
+        bucket, flags, info = "streaming", [], {}
+    else:
+        bucket, (flags, info) = "clean", audit_plan(plan)
+    for sp in stream_plans:
+        f2, i2 = audit_plan(sp)
+        flags.extend(x for x in f2 if x not in flags)
+        if bucket == "streaming":
+            for k, v in i2.items():
+                info[k] = info.get(k, 0) + v
+    if stream_plans:
+        info["stream_queries"] = len(stream_plans)
+    return bucket, flags, info
 
 
 def main() -> int:
@@ -251,35 +284,11 @@ def main() -> int:
             print(f"ERROR {name}", flush=True)
             continue
         secs = time.time() - t0
-        stream_plans = list(stream_core.STREAM_PLANS)
-        if is_materialized(plan):
-            if stream_plans:
-                # memory-sink replay: audit each replay's last micro-batch
-                flags: list[str] = []
-                info = {"stream_queries": len(stream_plans)}
-                for sp in stream_plans:
-                    f2, i2 = audit_plan(sp)
-                    flags.extend(x for x in f2 if x not in flags)
-                    for k, v in i2.items():
-                        info[k] = info.get(k, 0) + v
-                bucket = "streaming"
-            else:
-                buckets["materialized"] += 1
-                report[name] = {
-                    "bucket": "materialized",
-                    "seconds": round(secs, 1),
-                }
-                continue
-        else:
-            flags, info = audit_plan(plan)
-            bucket = "clean"
-            # a batch result whose build ALSO ran streams (e.g. reads back
-            # a streaming sink's files): sweep those micro-batch plans too
-            for sp in stream_plans:
-                f2, _ = audit_plan(sp)
-                flags.extend(x for x in f2 if x not in flags)
-            if stream_plans:
-                info["stream_queries"] = len(stream_plans)
+        bucket, flags, info = audit_built(plan, list(stream_core.STREAM_PLANS))
+        if bucket == "materialized":
+            buckets[bucket] += 1
+            report[name] = {"bucket": bucket, "seconds": round(secs, 1)}
+            continue
         if is_whitelisted(name, flags):
             allowed = WHITELIST_FLAGS[name]
             buckets["whitelisted"] += 1

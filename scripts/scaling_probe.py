@@ -1,11 +1,14 @@
 """Parallel-scaling probe: time shuffle/compute-heavy queries at a real SF.
 
 Runs the selected batch queries to the noop sink (min of N passes after a
-warm pass) on ``local[$SPARK_GRAFT_CPUS]`` against ``$SPARK_GRAFT_SF_DIR``
-(generate the corpus with scripts/gen_scale_data.py) and prints one JSON
-line. Run it twice — SPARK_GRAFT_CPUS=32 and =8 — and compare per-query:
-a ratio ≈ cores-ratio means the query parallelizes; ≈ 1 means it is
-fixed-overhead- or single-task-bound at this SF.
+warm pass, each pass profiled by scripts/profile.py) on
+``local[$SPARK_GRAFT_CPUS]`` against ``$SPARK_GRAFT_SF_DIR`` (generate the
+corpus with scripts/gen_scale_data.py) and prints one JSON line, with the
+profile record of each query's fastest pass under ``profiles``. Run it
+twice — SPARK_GRAFT_CPUS=32 and =8 — and compare per-query: a ratio ≈
+cores-ratio means the query parallelizes; ≈ 1 means it is fixed-overhead-
+or single-task-bound at this SF (``driver_gap_s`` vs ``spark.task_s`` in
+the profile tells which).
 
 This is a PROBE artifact (SCALING_r13.json), not the driver bench —
 bench.py and its query set/methodology are untouched.
@@ -15,11 +18,11 @@ from __future__ import annotations
 
 import json
 import os
+import runpy
 import sys
 import time
 
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _REPO)
+_SCRIPTS = os.path.dirname(os.path.abspath(__file__))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata_sf1")
 PASSES = int(os.environ.get("SCALING_PASSES", "3"))
@@ -45,10 +48,14 @@ PROBE_QUERIES = [
 
 
 def main() -> int:
+    # loaded by path (the module name ``profile`` is the standard library's);
+    # loading it also puts the repo, scripts/ and perfbench/ on sys.path
+    profile = runpy.run_path(os.path.join(_SCRIPTS, "profile.py"))["profile"]
+
+    from probes import RETAIN_ALL
     from pyspark.sql import functions as F
 
     from flink_psl_spark import get_spark
-    from flink_psl_spark.queries import QUERIES
     from flink_psl_spark.queries.registry import tables
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -63,6 +70,7 @@ def main() -> int:
         extra_conf={
             "spark.sql.files.maxPartitionBytes": "16m",
             "spark.sql.files.openCostInBytes": "1m",
+            **RETAIN_ALL,
         },
     )
     spark.range(1_000_000).selectExpr("sum(id)").collect()
@@ -74,16 +82,13 @@ def main() -> int:
         df.limit(1).count()
 
     out: dict[str, float] = {}
+    profiles: dict[str, dict] = {}
     for name in PROBE_QUERIES:
-        fn = QUERIES[name]
-        spark.sparkContext.setJobDescription(f"scaling:{name}")
-        walls = []
-        for _ in range(PASSES + 1):
-            t0 = time.time()
-            fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
-            walls.append(round(time.time() - t0, 3))
-        out[name] = min(walls[1:])
-        print(f"# {name}: warm={walls[0]} min={out[name]}", file=sys.stderr)
+        records = [profile(spark, name, SF_DIR, warm=i == 0)
+                   for i in range(PASSES)]
+        profiles[name] = min(records, key=lambda r: r["wall_s"])
+        out[name] = round(profiles[name]["wall_s"], 3)
+        print(f"# {name}: min={out[name]}", file=sys.stderr)
         # free the materialized blocks the heavy queries leave behind
         # (localCheckpoint RDDs pin block-manager memory until the
         # DataFrame is GC'd on BOTH sides); without this, sf1 passes
@@ -103,6 +108,7 @@ def main() -> int:
                 "passes": PASSES,
                 "queries": out,
                 "total": round(sum(out.values()), 3),
+                "profiles": profiles,
             }
         )
     )

@@ -10,6 +10,8 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"))
 
 import plan_audit
@@ -104,6 +106,21 @@ def test_batchscan_counts_as_file_scan():
     assert info["file_scans"] == 2
 
 
+def test_inlined_tokenize_counted_across_lines():
+    # tokenize's trim set renders a raw newline inside the UDF argument
+    tok = "split(trim(coalesce(text#1, ), Some( \t\n)), [ ]+, -1)"
+    _, info = plan_audit.audit_plan(
+        f"+- ArrowEvalPython [probe(size({tok}), slice({tok}, 1, 5))#9], "
+        "[pythonUDF0#10], 200\n   +- FileScan parquet [text#1]"
+    )
+    assert info["py_arg_inlined_tokenize"] == 1
+    _, info = plan_audit.audit_plan(
+        "+- ArrowEvalPython [probe(__tk#5)#9], [pythonUDF0#10], 200\n"
+        f"   +- Project [{tok} AS __tk#5]"
+    )
+    assert "py_arg_inlined_tokenize" not in info
+
+
 def test_whitelist_exempts_only_allowed_flags():
     """A whitelisted BNLJ site that regresses into BatchEvalPython or
     CartesianProduct must still gate — the exemption is per-flag, not
@@ -124,3 +141,34 @@ def test_whitelist_exempts_only_allowed_flags():
 def test_every_whitelist_entry_has_allowed_flags():
     for name in plan_audit.WHITELIST:
         assert plan_audit.WHITELIST_FLAGS.get(name), name
+
+
+@pytest.mark.parametrize(
+    "name", ["llm_bloom_decontamination", "llm_heavy_hitter_ngrams"]
+)
+def test_sketch_probe_args_keep_tokenize_out(spark, sf_dir, monkeypatch, name):
+    """The bloom and count-min probe UDFs (llm/text.py) are pinned with
+    asNondeterministic so the token projection stays below the Python
+    node. Without the pin the optimizer inlines the tokenize subtree into
+    the bloom probe's argument, where it re-runs per n-gram (5x on the
+    probe stage) with identical results: only the plan shows it, so gate
+    on it."""
+    from flink_psl_spark.llm import text
+    from flink_psl_spark.queries import QUERIES
+
+    # the bloom probe runs while the query is built (its candidates are
+    # materialized), so the frames handed to materialize are swept too
+    plans = []
+    materialize = text.materialize
+
+    def recording(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return materialize(df)
+
+    monkeypatch.setattr(text, "materialize", recording)
+    df = QUERIES[name](spark, sf_dir)
+    plans.append(df._jdf.queryExecution().executedPlan().toString())
+    infos = [plan_audit.audit_plan(p)[1] for p in plans]
+    assert sum(i["arrow_eval"] for i in infos) >= 1, "no probe UDF planned"
+    inlined = [i.get("py_arg_inlined_tokenize", 0) for i in infos]
+    assert not any(inlined), f"tokenize inlined into Python args: {inlined}"
