@@ -26,7 +26,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from flink_psl_spark.catalog import TABLES, load_table
 from flink_psl_spark.functions import register_sql_compat
 from flink_psl_spark.session import get_spark
 
@@ -79,12 +78,9 @@ class TableEnvironment:
 
     def register_fixture_tables(self, sf_dir: str) -> dict[str, DataFrame]:
         """Register the standard test-fixture tables of a scale-factor dir."""
-        out = {}
-        for t in TABLES:
-            df = load_table(self.spark, sf_dir, t)
-            df.createOrReplaceTempView(t)
-            out[t] = df
-        return out
+        from flink_psl_spark.queries.registry import tables
+
+        return tables(self.spark, sf_dir)
 
     def create_temporary_view(self, name: str, df: DataFrame) -> None:
         """≈ createTemporaryView(path, table)."""

@@ -826,7 +826,6 @@ def semantic_dedup(
     max_cluster_size: int | None = None,
     threshold: float = 0.95,
     two_level: bool = False,
-    materialize_assignments: bool = True,
 ) -> DataFrame:
     """Semantic (embedding-space) dedup, SemDeDup-style: cluster the
     corpus, then remove near-duplicates WITHIN each cluster only —
@@ -876,16 +875,14 @@ def semantic_dedup(
     (sub-bucket cap, keep-lowest-id) is routing-independent. AQE's skew
     join covers hot coarse cells.
 
-    ``materialize_assignments=True`` (default) makes CONSTRUCTION of the
-    returned DataFrame eager: the cluster assignments run as jobs inside
-    this call (``materialize`` — locally a ``localCheckpoint``, storing
-    corpus × (id, vector, cluster, sub, norm) in executor blocks that
-    are not fault-tolerant under the default backend; see
-    flink_psl_spark.materialize for the reliable-checkpoint switch).
-    Results are identical either way — the flag exists because the
-    in-cluster pair join otherwise re-plans the whole assignment
-    pipeline once per reference (measured: two corpus-sized assignment
-    subtrees per run). ``False`` keeps construction fully lazy.
+    CONSTRUCTION of the returned DataFrame is eager: the cluster
+    assignments run as jobs inside this call (``materialize`` — locally a
+    ``localCheckpoint``, storing corpus × (id, vector, cluster, sub, norm)
+    in executor blocks that are not fault-tolerant under the default
+    backend; see flink_psl_spark.materialize for the reliable-checkpoint
+    switch), because the in-cluster pair join otherwise re-plans the
+    whole assignment pipeline once per reference (measured: two
+    corpus-sized assignment subtrees per run).
     """
     from pyspark.sql import Window
 
@@ -1029,22 +1026,19 @@ def semantic_dedup(
     ).withColumn(
         "__n", l2_norm("__v")  # once per row, not per in-cluster pair
     )
-    if materialize_assignments:
-        # (``materialize_assignments=False`` keeps the fully lazy plan —
-        # used by the plan-shape test to pin the coarse-cell equi-join.)
-        assigned = assigned.transform(materialize)
-        # fan the checkpointed assignments out on the pair-join key: the
-        # assignment exchange is AQE-coalesced by BYTES (rows are small),
-        # but the in-cluster pair join inheriting that partitioning does
-        # C(cluster, 2) cosine evaluations per key — compute-dense, not
-        # byte-dense (at sf1 the 17M-pair stage ran ~2 tasks wide;
-        # whole-query effective parallelism 7.4 on 32 cores). An explicit
-        # keyed repartition is exempt from AQE coalescing; both self-join
-        # sides derive from this frame, so the join stays co-partitioned.
-        # At real scale the exchange is byte-big and this matches the
-        # planner's own choice.
-        par = assigned.sparkSession.sparkContext.defaultParallelism
-        assigned = assigned.repartition(par, "cluster_id", "__sub")
+    assigned = assigned.transform(materialize)
+    # fan the checkpointed assignments out on the pair-join key: the
+    # assignment exchange is AQE-coalesced by BYTES (rows are small),
+    # but the in-cluster pair join inheriting that partitioning does
+    # C(cluster, 2) cosine evaluations per key — compute-dense, not
+    # byte-dense (at sf1 the 17M-pair stage ran ~2 tasks wide;
+    # whole-query effective parallelism 7.4 on 32 cores). An explicit
+    # keyed repartition is exempt from AQE coalescing; both self-join
+    # sides derive from this frame, so the join stays co-partitioned.
+    # At real scale the exchange is byte-big and this matches the
+    # planner's own choice.
+    par = assigned.sparkSession.sparkContext.defaultParallelism
+    assigned = assigned.repartition(par, "cluster_id", "__sub")
     pairs = (
         assigned.alias("l")
         .join(

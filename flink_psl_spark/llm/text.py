@@ -922,11 +922,7 @@ def _cms_heavy_items(items, item_col, threshold, *, eps, confidence):
             est = np.minimum(est, table[i][pos[i]])
         return pd.Series(est)
 
-    # ND for the same reason as make_bloom_checker's probe: the estimate
-    # feeds a filter, and a deterministic UDF there invites the optimizer
-    # to duplicate the eval / inline the argument (guide §4.4). Pure
-    # kernel — ND only pins it in place.
-    _estimate = F.pandas_udf(_estimate_kernel, "bigint").asNondeterministic()
+    _estimate = F.pandas_udf(_estimate_kernel, "bigint")
 
     candidates = grams.where(
         _estimate(F.xxhash64(item_col)) >= F.lit(threshold)

@@ -370,8 +370,7 @@ def sql_gateway_rest(spark, sf_dir):
     are the aggregated output, not the scan."""
     from flink_psl_spark.gateway import GatewayClient, SqlGateway
 
-    for name, df in tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
+    tables(spark, sf_dir)
     gw = SqlGateway(spark).start()
     try:
         client = GatewayClient(gw.url)

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -12,14 +13,30 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
 _registered: dict[tuple[int, str], dict[str, DataFrame]] = {}
+# per session: the sf_dir its fixture views point at
+_views_at: dict[int, str] = {}
+# keeps _views_at equal to what the catalog holds under concurrent calls
+_views_lock = threading.Lock()
 
 
 def tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register (once per session+dir) and return the fixture tables."""
+    """Return the fixture tables of ``sf_dir`` and point the session's
+    fixture views at them.
+
+    The only code that points the views: the frames load once per
+    session+dir, and the views are re-pointed whenever the session's
+    last ``tables`` call named another dir, so SQL text always reads the
+    dir its caller asked for. A repeat call for the same dir is a dict
+    lookup."""
     key = (id(spark), sf_dir)
-    if key not in _registered:
-        _registered[key] = register_tables(spark, sf_dir)
-    return _registered[key]
+    with _views_lock:
+        if key not in _registered:
+            _registered[key] = register_tables(spark, sf_dir)
+        elif _views_at.get(id(spark)) != sf_dir:
+            for name, df in _registered[key].items():
+                df.createOrReplaceTempView(name)
+        _views_at[id(spark)] = sf_dir
+        return _registered[key]
 
 
 def query(name: str, oracle: str | None = None):

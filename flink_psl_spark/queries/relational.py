@@ -11,8 +11,6 @@ flip the value hash.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import functions as F
 
 from flink_psl_spark.queries.registry import query, sql_query, tables
@@ -2224,66 +2222,11 @@ def schema_contract_migration(spark, sf_dir):
 # (spark.sql.cteRecursionLevelLimit defaults to 100; chains here are <=25).
 # One SQL text runs verbatim on both engines (event_paths); the order
 # chain hoists its loop-invariant rank on the Spark side — see docstring.
+# The materialized rank binds to the text as a spark.sql frame argument
+# ({view}): PySpark registers it under a unique name, analyzes the text
+# and drops the view before spark.sql returns, so concurrent callers
+# never share a name and nothing stays in the catalog.
 # ---------------------------------------------------------------------------
-
-# last registered (owning Thread, view name) per (thread ident, tag) —
-# dropped on the SAME thread's next invocation so repeated harness
-# sweeps don't accumulate catalog-pinned checkpoints. Keyed by thread so
-# one caller can never drop a view another caller registered but has not
-# yet analyzed (ADVICE r10: a global per-tag key let caller B drop
-# caller A's fresh view in the window between A's return and A's
-# spark.sql analysis); the lock makes the read-modify-write atomic so no
-# name is ever overwritten without being dropped (a lost name = a leaked
-# checkpoint). The OWNING Thread object is stored alongside the name
-# (ADVICE r11): idents are recycled, so a bare-ident key could hand a
-# dead caller's reap slot to an unrelated live caller, and a thread that
-# exits without re-invoking used to leak its view forever — dead
-# threads' entries are now reaped opportunistically on every call.
-_HOIST_LAST: dict = {}
-_HOIST_LOCK = threading.Lock()
-
-
-def _hoisted_view(df, tag: str) -> str:
-    """Materialize a loop-invariant DataFrame (localCheckpoint) and
-    register it under a UNIQUE temp-view name, returning the name.
-
-    Unique uuid names make concurrent invocations safe (a fixed name
-    would let one caller's view clobber another's — ADVICE r9; a
-    counter would race on +=). spark.sql() analyzes eagerly, so THIS
-    thread's previous view can be dropped here without affecting a
-    DataFrame already built on it — that bounds catalog-pinned
-    checkpoints to one per (thread, tag) while the blocks themselves
-    free when the old DataFrame is GC'd. Dead threads' views are
-    equally safe to reap: the registering call analyzed its spark.sql
-    before returning, so a thread that is no longer alive has no
-    pending analysis. The blocks are small (a ranked projection, not
-    the fact table)."""
-    import uuid
-
-    spark = df.sparkSession
-    cur = threading.current_thread()
-    key = (cur.ident, tag)
-    with _HOIST_LOCK:
-        # this thread's previous view, plus every entry whose owning
-        # thread has exited (a live different thread can never share
-        # our ident, so a key match with a foreign Thread object means
-        # the ident was recycled from a dead owner — reap, don't drop
-        # a live caller's view)
-        stale = [
-            k for k, (th, _) in _HOIST_LAST.items()
-            if k == key or not th.is_alive()
-        ]
-        reap = [_HOIST_LAST.pop(k)[1] for k in stale]
-    for prev in reap:
-        try:
-            spark.catalog.dropTempView(prev)
-        except Exception:
-            pass
-    name = f"__hoist_{tag}_{uuid.uuid4().hex[:12]}"
-    df.transform(materialize).createOrReplaceTempView(name)
-    with _HOIST_LOCK:
-        _HOIST_LAST[key] = (cur, name)
-    return name
 
 
 @query(
@@ -2339,7 +2282,6 @@ def recursive_cte_order_chain(spark, sf_dir):
         )
         .select("o_custkey", "o_orderkey", "price", "rn")
     )
-    view = _hoisted_view(ranked, "ranked_orders_chain")
     # SHUFFLE_HASH with the FRONTIER (c) as build side: the r12 profile
     # showed SHUFFLE_HASH(r) rebuilding a ranked-table hash map (150k
     # rows, 38 MiB, ~60 ms) at EVERY UnionLoop level to probe a frontier
@@ -2355,7 +2297,7 @@ def recursive_cte_order_chain(spark, sf_dir):
     # pinning partitions (repartition before the checkpoint) measured
     # 2x SLOWER locally (32 fixed tasks x ~40 levels vs AQE-coalesced).
     return spark.sql(
-        f"""
+        """
         WITH RECURSIVE chain (o_custkey, o_orderkey, step, cum) AS (
           SELECT o_custkey, o_orderkey, 1, ROUND(price, 2)
           FROM {view} WHERE rn = 1
@@ -2369,7 +2311,8 @@ def recursive_cte_order_chain(spark, sf_dir):
         SELECT o_custkey, o_orderkey, CAST(step AS INT) AS step,
                ROUND(cum, 2) AS cum_spend
         FROM chain
-        """
+        """,
+        view=ranked.transform(materialize),
     )
 
 @query(
@@ -2417,9 +2360,8 @@ def recursive_cte_event_paths(spark, sf_dir):
         .where(F.col("rn") <= 5)  # recursion probes rn = depth+1 <= 5
         .select("user_id", "event_type", "rn")
     )
-    view = _hoisted_view(ev, "ranked_event_paths")
     return spark.sql(
-        f"""
+        """
         WITH RECURSIVE paths (user_id, path, depth) AS (
           SELECT user_id, event_type, 1
           FROM {view} WHERE rn = 1
@@ -2434,7 +2376,8 @@ def recursive_cte_event_paths(spark, sf_dir):
         FROM paths
         GROUP BY depth, path
         HAVING COUNT(*) >= 5
-        """
+        """,
+        view=ev.transform(materialize),
     )
 
 

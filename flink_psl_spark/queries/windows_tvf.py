@@ -376,8 +376,7 @@ def cumulate_tvf_sql(spark, sf_dir):
     library operator, proven against the same oracle."""
     from flink_psl_spark.temporal_sql import rewrite_flink_sql
 
-    for name, df in tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
+    tables(spark, sf_dir)
     return spark.sql(
         rewrite_flink_sql(
             """
@@ -518,8 +517,7 @@ def session_tvf_sql(spark, sf_dir):
     the native session_window aggregation."""
     from flink_psl_spark.temporal_sql import rewrite_flink_sql
 
-    for name, df in tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
+    tables(spark, sf_dir)
     return spark.sql(
         rewrite_flink_sql(
             """

@@ -166,8 +166,7 @@ def run_script(
     if sf_dir is not None:
         from flink_psl_spark.queries.registry import tables
 
-        for name, df in tables(spark, sf_dir).items():
-            df.createOrReplaceTempView(name)
+        tables(spark, sf_dir)
     results: list[StatementResult] = []
     for stmt in _group_statement_sets(split_statements(script)):
         if isinstance(stmt, list):

@@ -98,15 +98,14 @@ def run_to_memory_table(
 
     State partitioning: stateful streaming pays a per-partition, per-batch
     state commit; unlike batch (AQE) nothing resizes streaming shuffles to
-    the workload, so the replay pins a small partition count
-    ($SPARK_GRAFT_STREAM_PARTITIONS, default 8 — measured 2.6× on the
-    interval join vs 32). ``shuffle_partitions`` overrides per query:
-    JVM-native state-heavy replays (stream-stream joins) measure another
-    ~30% faster and less variable at 4, while Python-stateful operators
-    (applyInPandas) want the worker parallelism of 8 — so the knob is
-    per-call, not global. Production pipelines size shuffle partitions to
-    their cluster before starting the query (the count is then fixed by the
-    checkpoint).
+    the workload, so the replay pins a small partition count (default
+    8 — measured 2.6× on the interval join vs 32). ``shuffle_partitions``
+    overrides per query: JVM-native state-heavy replays (stream-stream
+    joins) measure another ~30% faster and less variable at 4, while
+    Python-stateful operators (applyInPandas) want the worker parallelism
+    of 8 — so the knob is per-call, not global. Production pipelines size
+    shuffle partitions to their cluster before starting the query (the
+    count is then fixed by the checkpoint).
 
     ``final_nodata_batch=False`` skips the trailing no-data micro-batch
     (``spark.sql.streaming.noDataMicroBatches.enabled``) — that batch
@@ -132,15 +131,7 @@ def run_to_memory_table(
     )
     part_key = "spark.sql.shuffle.partitions"
     prev_parts = spark.conf.get(part_key, None)
-    # precedence: an explicitly SET env knob wins (the documented user
-    # override), then the per-call pin, then the default
-    env_parts = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    spark.conf.set(
-        part_key,
-        env_parts
-        if env_parts is not None
-        else (str(shuffle_partitions) if shuffle_partitions is not None else "8"),
-    )
+    spark.conf.set(part_key, str(shuffle_partitions or 8))
     nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
     prev_nodata = spark.conf.get(nodata_key, None)
     if not final_nodata_batch:

@@ -171,12 +171,9 @@ def golden_signature(spark, sf_dir: str, name: str) -> dict:
         rewrite_flink_sql,
     )
 
+    t = tables(spark, sf_dir)
     if name in BUILDERS:
-        return plan_signature(
-            BUILDERS[name](spark, tables(spark, sf_dir)), "optimized"
-        )
-    for tname, df in tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(tname)
+        return plan_signature(BUILDERS[name](spark, t), "optimized")
     if name == "temporal_join":
         events = spark.table("events")
         events.where(F.col("event_type") == "click").groupBy(

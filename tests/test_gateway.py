@@ -89,8 +89,10 @@ def test_error_statement_reports_error_status(client):
     client.close_session(h)
 
 
-def test_ddl_and_query_over_views(client, spark, t):
-    t["nation"].createOrReplaceTempView("nation")
+def test_ddl_and_query_over_views(client, spark, sf_dir):
+    from flink_psl_spark.queries.registry import tables
+
+    tables(spark, sf_dir)
     h = client.open_session()
     op = client.execute(
         h,

@@ -361,10 +361,11 @@ def test_compile_plan_for_insert_does_not_execute(spark, tmp_path):
 
 # -- gateway -----------------------------------------------------------------
 
-def test_gateway_explain_statement(spark, t):
+def test_gateway_explain_statement(spark, sf_dir):
     from flink_psl_spark.gateway import GatewayClient, SqlGateway
+    from flink_psl_spark.queries.registry import tables
 
-    t["customer"].createOrReplaceTempView("customer")
+    tables(spark, sf_dir)
     gw = SqlGateway(spark).start()
     try:
         client = GatewayClient(gw.url)

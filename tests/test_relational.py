@@ -98,47 +98,61 @@ def test_filter_pushdown_reaches_scan(spark, sf_dir):
     assert "ReadSchema" in plan
 
 
-def test_hoisted_view_is_per_thread_safe(spark):
-    """_hoisted_view must never drop a view another LIVE thread
-    registered but has not yet analyzed (ADVICE r10): the drop set is
-    keyed by (thread, tag), so B's invocation leaves A's fresh view
-    resolvable, while A's own next invocation still reaps A's previous
-    view. Once B exits without re-invoking, its orphaned view is reaped
-    by the next call on any thread (ADVICE r11: the old ident-keyed map
-    leaked one catalog-pinned checkpoint per exited thread, and a
-    recycled ident handed a dead caller's slot to an unrelated one)."""
+def test_recursive_cte_concurrent_builds_leave_no_views(spark, sf_dir):
+    """Two threads build and collect recursive_cte_order_chain at once:
+    each binds its materialized rank to the SQL text as a spark.sql frame
+    argument, both get the same rows, and neither leaves a view behind."""
     import threading
+    from concurrent.futures import ThreadPoolExecutor
 
-    from flink_psl_spark.queries.relational import _hoisted_view
+    from flink_psl_spark.queries import QUERIES
+    from flink_psl_spark.queries.registry import tables
 
-    df = spark.range(3)
-    tag = "hoist_thread_test"
-    name_a1 = _hoisted_view(df, tag)
+    def views():
+        return {v.name for v in spark.catalog.listTables() if v.isTemporary}
 
-    names_b = []
-    registered = threading.Event()
-    release = threading.Event()
+    tables(spark, sf_dir)  # the fixture views are not the query's to drop
+    before = views()
+    barrier = threading.Barrier(2)
 
-    def other():
-        names_b.append(_hoisted_view(df, tag))
-        registered.set()
-        release.wait(30)
+    def run(_):
+        barrier.wait(60)
+        df = QUERIES["recursive_cte_order_chain"](spark, sf_dir)
+        return sorted(map(tuple, df.collect()))
 
-    th = threading.Thread(target=other)
-    th.start()
-    assert registered.wait(30)
-    # B's call (same tag, different thread) must NOT have dropped A's view
-    assert spark.sql(f"SELECT COUNT(*) AS n FROM {name_a1}").first()["n"] == 3
-    # A's own next call reaps only A's previous view...
-    name_a2 = _hoisted_view(df, tag)
-    assert not spark.catalog.tableExists(name_a1)
-    # ...and leaves the still-LIVE B's view alone
-    assert spark.sql(f"SELECT COUNT(*) AS n FROM {names_b[0]}").first()["n"] == 3
-    release.set()
-    th.join()
-    # B exited without re-invoking: the next call reaps B's orphan (and
-    # A's previous view, as always)
-    name_a3 = _hoisted_view(df, tag)
-    assert not spark.catalog.tableExists(name_a2)
-    assert not spark.catalog.tableExists(names_b[0])
-    spark.catalog.dropTempView(name_a3)
+    with ThreadPoolExecutor(2) as pool:
+        a, b = pool.map(run, range(2))
+    assert a and a == b
+    assert views() == before
+
+
+def test_tables_repoints_fixture_views(spark, sf_dir, tmp_path):
+    """SQL text reads the fixture views, so tables() must point them at
+    the dir its caller names even when that dir's frames are cached: A,
+    then B, then A again leaves the views on A."""
+    import os
+
+    from flink_psl_spark.catalog import TABLES
+    from flink_psl_spark.queries.registry import tables
+
+    other = tmp_path / "sf_other"
+    other.mkdir()
+    for name in TABLES:
+        if name != "lineitem":
+            os.symlink(
+                os.path.abspath(f"{sf_dir}/{name}.parquet"),
+                other / f"{name}.parquet",
+            )
+    tables(spark, sf_dir)["lineitem"].limit(7).write.parquet(
+        str(other / "lineitem.parquet")
+    )
+
+    def n_lineitem():
+        return spark.sql("SELECT COUNT(*) AS n FROM lineitem").first()["n"]
+
+    want = tables(spark, sf_dir)["lineitem"].count()
+    assert want != 7
+    tables(spark, str(other))
+    assert n_lineitem() == 7
+    tables(spark, sf_dir)
+    assert n_lineitem() == want

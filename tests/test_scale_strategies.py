@@ -264,13 +264,13 @@ def test_semantic_dedup_cluster_count_scales(spark):
     assert 1 < k <= 10
 
 
-def test_semantic_dedup_two_level_routing(spark):
+def test_semantic_dedup_two_level_routing(spark, monkeypatch):
     """The IVF-style two-level path must (a) still dedup exact duplicates
     — identical vectors route identically whatever the routing depth —
     (b) be deterministic across runs, and (c) never broadcast the full
     fine-centroid table (only the ~sqrt(K) coarse set is broadcast; the
     fine resolution is an equi-join on the coarse cell)."""
-    from flink_psl_spark.llm import semantic_dedup
+    from flink_psl_spark.llm import semantic_dedup, similarity
 
     # 60 distinct direction groups x 5 identical copies each
     base = spark.range(300).select(
@@ -284,6 +284,16 @@ def test_semantic_dedup_two_level_routing(spark):
     kw = dict(
         n_clusters=36, max_cluster_size=50, threshold=0.9999, two_level=True
     )
+    # record the assignment frame semantic_dedup hands to materialize: its
+    # plan still holds the upstream routing operators
+    handed = []
+    materialize = similarity.materialize
+
+    def recording(df):
+        handed.append(df._jdf.queryExecution().executedPlan().toString())
+        return materialize(df)
+
+    monkeypatch.setattr(similarity, "materialize", recording)
     out = semantic_dedup(base, **kw)
     got = sorted(r["vec_id"] for r in out.collect())
     # each identical-copy group keeps at least its lowest id and drops
@@ -295,15 +305,14 @@ def test_semantic_dedup_two_level_routing(spark):
     again = sorted(r["vec_id"] for r in semantic_dedup(base, **kw).collect())
     assert again == got
     # plan: the corpus-side join keyed by the coarse cell exists. The
-    # default path materializes assignments before the in-cluster self
-    # join (r12: the self-join otherwise re-planned the whole assignment
-    # pipeline per reference), which hides the upstream operators from
-    # the returned plan — pin the shape on the fully lazy variant.
-    lazy = semantic_dedup(base, materialize_assignments=False, **kw)
-    plan = lazy._jdf.queryExecution().executedPlan().toString()
+    # assignments are materialized before the in-cluster self join (r12:
+    # the self-join otherwise re-planned the whole assignment pipeline
+    # per reference), which hides the upstream operators from the
+    # returned plan — pin the shape on the materialized frame.
+    plan = handed[0]
     assert "__cell" in plan
-    # and the default (materialized) path scans the assignment table
-    # instead of recomputing it per branch
+    # and the returned plan scans the assignment table instead of
+    # recomputing it per branch
     plan_default = out._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in plan_default
 

@@ -354,14 +354,15 @@ def test_join_hint_translation(spark, t):
     assert "SortMergeJoin" in plan, plan[:800]
 
 
-def test_session_tvf_rewrite_matches_session_window(spark, t):
+def test_session_tvf_rewrite_matches_session_window(spark, sf_dir):
     """SESSION TVF (1.17+ form) rewrites to gaps-and-islands SQL whose
     per-session bounds equal Spark's native session_window exactly."""
     from pyspark.sql import functions as F
 
+    from flink_psl_spark.queries.registry import tables
     from flink_psl_spark.temporal_sql import rewrite_flink_sql
 
-    t["events"].createOrReplaceTempView("events")
+    t = tables(spark, sf_dir)
     got = spark.sql(
         rewrite_flink_sql(
             """
