@@ -20,7 +20,6 @@ Pattern.within) — mandatory for unbounded streams with non-matching rows.
 
 from __future__ import annotations
 
-import json
 from collections.abc import Iterator
 
 import pandas as pd
@@ -45,6 +44,7 @@ from flink_psl_spark.cep import (
     _to_spec,
     _validate_modes,
 )
+from flink_psl_spark.streaming.state import RowState
 
 
 def streaming_match_recognize(
@@ -141,23 +141,14 @@ def streaming_match_recognize(
     spec = _to_spec(pattern)
     meas = [(m.out_name, m.step, m.fn.lower(), m.col) for m in measures]
     sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
+    rows = RowState(
+        prepared, [c for c in prepared.columns if c != partition_by],
+        scalars="seq bigint", epoch=ts_col, unit="ms",
+    )
 
     def fn(key, batches: Iterator[pd.DataFrame], state: GroupState):
-        buf = (
-            pd.read_json(state.get[0], orient="records", convert_dates=False)
-            if state.exists
-            else pd.DataFrame()
-        )
-        seq = state.get[1] if state.exists else 0
-        new = [b for b in batches]
-        if new:
-            incoming = pd.concat(new, ignore_index=True)
-            incoming = incoming.drop(columns=[partition_by])
-            # epoch ms regardless of the arrow-side datetime64 unit
-            incoming[ts_col] = (
-                incoming[ts_col].values.astype("datetime64[ms]").astype("int64")
-            )
-            buf = pd.concat([buf, incoming], ignore_index=True)
+        buf, seq = rows.load(state, 0)
+        buf = rows.extend(buf, batches)
         wm_ms = state.getCurrentWatermarkMs()
         emitted = []
         if len(buf):
@@ -167,8 +158,6 @@ def streaming_match_recognize(
             final = buf[buf[ts_col] <= wm_ms].reset_index(drop=True)
             preds = {
                 name: final[c].fillna(False).to_numpy(dtype=bool)
-                if c in final
-                else pd.Series([], dtype=bool).to_numpy()
                 for name, c in pred_cols.items()
             }
             n, start, consumed_upto = len(final), 0, 0
@@ -337,7 +326,7 @@ def streaming_match_recognize(
             buf = pd.concat([keep_final, pending], ignore_index=True)
             if horizon_ms is not None and wm_ms > 0:
                 buf = buf[buf[ts_col] >= wm_ms - horizon_ms]
-        state.update((buf.to_json(orient="records"), seq))
+        rows.save(state, buf, seq)
         if len(buf):
             # wake when the watermark first passes a buffered row — the
             # earliest moment more of the buffer finalizes (must be strictly
@@ -347,13 +336,11 @@ def streaming_match_recognize(
             )
         if emitted:
             yield pd.DataFrame(emitted)[out_names]
-        else:
-            yield pd.DataFrame({c: [] for c in out_names})
 
     return prepared.groupBy(partition_by).applyInPandasWithState(
         fn,
         outputStructType=out_schema,
-        stateStructType="buf string, seq bigint",
+        stateStructType=rows.schema,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )

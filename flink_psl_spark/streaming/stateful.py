@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from flink_psl_spark.streaming.state import RowState
+
 
 def keyed_top_n(
     events: DataFrame,
@@ -59,26 +61,15 @@ def keyed_top_n(
          f"{order_col} {_dt(src, order_col)}"]
         + [f"{c} {_dt(src, c)}" for c in payload_cols]
     )
-    state_fields = ", ".join(
-        [f"{order_col} array<{_dt(src, order_col)}>"]
-        + [f"{c} array<{_dt(src, c)}>" for c in payload_cols]
-    )
+    rows = RowState(src, [order_col, *payload_cols])
 
     def fn(
         key: tuple[Any, ...],
         batches: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            stored = state.get
-            buf = pd.DataFrame(
-                {order_col: list(stored[0]),
-                 **{c: list(stored[i + 1]) for i, c in enumerate(payload_cols)}}
-            )
-        else:
-            buf = pd.DataFrame({order_col: [], **{c: [] for c in payload_cols}})
-        new = pd.concat([buf] + [b[[order_col, *payload_cols]] for b in batches])
-        new = new.sort_values(
+        buf = rows.load(state)
+        new = rows.extend(buf, batches).sort_values(
             [order_col, *tiebreak_cols],
             ascending=[not descending] + [True] * len(tiebreak_cols),
             kind="mergesort",
@@ -86,25 +77,17 @@ def keyed_top_n(
         changed = len(new) != len(buf) or not new.reset_index(drop=True).equals(
             buf.reset_index(drop=True)
         )
-        state.update(
-            (new[order_col].tolist(),
-             *[new[c].tolist() for c in payload_cols])
-        )
+        rows.save(state, new)
         if changed:
             out = new.reset_index(drop=True)
             out.insert(0, "rank", range(1, len(out) + 1))
             out.insert(0, key_col, key[0])
             yield out
-        else:
-            yield pd.DataFrame(
-                {key_col: [], "rank": [], order_col: [],
-                 **{c: [] for c in payload_cols}}
-            )
 
     return src.groupBy(key_col).applyInPandasWithState(
         fn,
         outputStructType=out_fields,
-        stateStructType=state_fields,
+        stateStructType=rows.schema,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -318,24 +301,19 @@ def keyed_count_window(
     if evictor is not None and evictor[0] not in ("count", "delta"):
         raise ValueError(f"unknown evictor {evictor[0]!r}")
     src = events.select(key_col, order_col, value_col)
-    k_dt, o_dt, v_dt = (_dt(src, c) for c in (key_col, order_col, value_col))
+    k_dt = _dt(src, key_col)
     out_fields = (
         f"{key_col} {k_dt}, window_seq bigint, n int, "
         f"sum_v double, min_v double, max_v double"
     )
-    state_fields = f"seq bigint, ord array<{o_dt}>, vals array<{v_dt}>"
+    rows = RowState(src, [order_col, value_col], scalars="seq bigint")
 
     def fn(key, batches: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            seq, ords, vals = state.get
-            buf = pd.DataFrame({order_col: list(ords), value_col: list(vals)})
-        else:
-            seq = 0
-            buf = pd.DataFrame({order_col: [], value_col: []})
+        buf, seq = rows.load(state, 0)
         outs = []
         for b in batches:
             b = b.sort_values(order_col, kind="mergesort")
-            buf = pd.concat([buf, b[[order_col, value_col]]], ignore_index=True)
+            buf = rows.extend(buf, [b])
             while len(buf) >= size:
                 win, buf = buf.iloc[:size], buf.iloc[size:]
                 if evictor is not None:
@@ -356,21 +334,14 @@ def keyed_count_window(
                     }
                 )
                 seq += 1
-        state.update(
-            (seq, buf[order_col].tolist(), buf[value_col].tolist())
-        )
+        rows.save(state, buf, seq)
         if outs:
             yield pd.DataFrame(outs)
-        else:
-            yield pd.DataFrame(
-                {key_col: [], "window_seq": [], "n": [],
-                 "sum_v": [], "min_v": [], "max_v": []}
-            )
 
     return src.groupBy(key_col).applyInPandasWithState(
         fn,
         outputStructType=out_fields,
-        stateStructType=state_fields,
+        stateStructType=rows.schema,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -408,19 +379,13 @@ def streaming_rows_over(
         f"{key_col} {k_dt}, {order_col} {o_dt}, {value_col} {v_dt}{pay_out}, "
         f"run_sum double, run_avg double, run_cnt int"
     )
-    state_fields = f"ord array<{o_dt}>, vals array<{v_dt}>"
+    rows = RowState(src, [order_col, value_col])
 
     def fn(key, batches: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            ords, vals = state.get
-            tail = pd.DataFrame({order_col: list(ords), value_col: list(vals)})
-        else:
-            tail = pd.DataFrame({order_col: [], value_col: []})
+        tail = rows.load(state)
         for b in batches:
             b = b.sort_values(order_col, kind="mergesort").reset_index(drop=True)
-            hist = pd.concat(
-                [tail, b[[order_col, value_col]]], ignore_index=True
-            )
+            hist = rows.extend(tail, [b])
             n_tail = len(tail)
             out = b.copy()
             sums, avgs, cnts = [], [], []
@@ -437,12 +402,12 @@ def streaming_rows_over(
             out["run_cnt"] = cnts
             tail = hist.iloc[max(0, len(hist) - preceding):]
             yield out
-        state.update((tail[order_col].tolist(), tail[value_col].tolist()))
+        rows.save(state, tail)
 
     return src.groupBy(key_col).applyInPandasWithState(
         fn,
         outputStructType=out_fields,
-        stateStructType=state_fields,
+        stateStructType=rows.schema,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -480,31 +445,25 @@ def streaming_range_over(
         f"{key_col} {k_dt}, {order_col} {o_dt}, {value_col} {v_dt}{pay_out}, "
         f"run_sum double, run_avg double, run_cnt int"
     )
-    state_fields = f"ord array<{o_dt}>, vals array<{v_dt}>"
+    rows = RowState(src, [order_col, value_col])
     delta = pd.Timedelta(preceding)
 
     def fn(key, batches: Iterator[pd.DataFrame], state: GroupState):
         import numpy as np
 
-        if state.exists:
-            ords, vals = state.get
-            tail = pd.DataFrame({order_col: list(ords), value_col: list(vals)})
-        else:
-            tail = pd.DataFrame({order_col: [], value_col: []})
+        tail = rows.load(state)
         for b in batches:
             b = b.sort_values(order_col, kind="mergesort").reset_index(drop=True)
             hist = (
-                pd.concat([tail, b[[order_col, value_col]]], ignore_index=True)
+                rows.extend(tail, [b])
                 .sort_values(order_col, kind="mergesort")
                 .reset_index(drop=True)
             )
-            # empty/state-rehydrated tails arrive object-dtyped: normalize to
-            # datetime64/float64 so searchsorted compares homogeneously
-            ords_np = pd.to_datetime(hist[order_col]).to_numpy()
-            vals_np = hist[value_col].to_numpy(dtype="float64")
+            ords_np = hist[order_col].to_numpy()
+            vals_np = hist[value_col].to_numpy()
             out = b.copy()
             sums, avgs, cnts = [], [], []
-            b_ords = pd.to_datetime(b[order_col]).to_numpy()
+            b_ords = b[order_col].to_numpy()
             np_delta = np.timedelta64(delta)
             for t in b_ords:
                 lo = np.searchsorted(ords_np, t - np_delta, side="left")
@@ -523,12 +482,12 @@ def streaming_range_over(
                 else hist
             )
             yield out
-        state.update((tail[order_col].tolist(), tail[value_col].tolist()))
+        rows.save(state, tail)
 
     return src.groupBy(key_col).applyInPandasWithState(
         fn,
         outputStructType=out_fields,
-        stateStructType=state_fields,
+        stateStructType=rows.schema,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -563,35 +522,15 @@ def streaming_event_time_sort(
     pay_out = "".join(f", {c} {_dt(src, c)}" for c in pay_cols)
     out_fields = f"{key_col} {k_dt}, emit_seq bigint, {ts_col} {_dt(src, ts_col)}{pay_out}"
     out_names = [key_col, "emit_seq", ts_col, *pay_cols]
-    # typed array state, NOT json: pandas read_json (ujson) parses doubles
-    # with last-ulp error, which the exact value compare would catch
-    state_fields = ", ".join(
-        [f"{ts_col} array<bigint>"]
-        + [f"{c} array<{_dt(src, c)}>" for c in pay_cols]
-        + ["seq bigint"]
+    # MICROsecond epoch in state: events carry sub-ms timestamps, a ms
+    # cast would truncate emitted values
+    rows = RowState(
+        src, [ts_col, *pay_cols], scalars="seq bigint", epoch=ts_col
     )
 
     def fn(key, batches: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            stored = state.get
-            buf = pd.DataFrame(
-                {ts_col: list(stored[0]),
-                 **{c: list(stored[i + 1]) for i, c in enumerate(pay_cols)}}
-            )
-            seq = stored[len(pay_cols) + 1]
-        else:
-            buf = pd.DataFrame()
-            seq = 0
-        new = [b for b in batches]
-        if new:
-            incoming = pd.concat(new, ignore_index=True)
-            incoming = incoming.drop(columns=[key_col])
-            # keep MICROsecond precision in state (events carry sub-ms
-            # timestamps; a ms cast would truncate emitted values)
-            incoming[ts_col] = (
-                incoming[ts_col].values.astype("datetime64[us]").astype("int64")
-            )
-            buf = pd.concat([buf, incoming], ignore_index=True)
+        buf, seq = rows.load(state, 0)
+        buf = rows.extend(buf, batches)
         wm_us = state.getCurrentWatermarkMs() * 1000
         emitted = None
         if len(buf):
@@ -606,27 +545,16 @@ def streaming_event_time_sort(
                 emitted[ts_col] = pd.to_datetime(emitted[ts_col], unit="us")
                 seq += len(final)
                 buf = buf[buf[ts_col] > wm_us]
+        rows.save(state, buf, seq)
         if len(buf):
-            state.update(
-                (buf[ts_col].tolist(),
-                 *[buf[c].tolist() for c in pay_cols], seq)
-            )
-            # 1 ms early — Spark fires strictly above the set timestamp,
-            # Flink's onTimer at wm >= t; flush re-checks ts <= wm
-            state.setTimeoutTimestamp(
-                max(int(buf[ts_col].min()) // 1000 - 1, wm_us // 1000 + 1)
-            )
-        else:
-            state.update(([], *[[] for _ in pay_cols], seq))
+            state.setTimeoutTimestamp(_timer_ms(int(buf[ts_col].min()), wm_us))
         if emitted is not None:
             yield emitted[out_names]
-        else:
-            yield pd.DataFrame({c: [] for c in out_names})
 
     return src.groupBy(key_col).applyInPandasWithState(
         fn,
         outputStructType=out_fields,
-        stateStructType=state_fields,
+        stateStructType=rows.schema,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
@@ -698,6 +626,69 @@ def _interval_ms(s: str) -> int:
     return _interval_us(s) // 1000
 
 
+def _timer_ms(due_us: int, wm_us: int | None = None) -> int:
+    """Event-time timer (epoch ms) for the finalization point ``due_us``,
+    armed 1 ms EARLY: Spark fires event-time timeouts only when the
+    watermark STRICTLY exceeds the set timestamp, while Flink's onTimer
+    fires at wm >= t — arming at due-1ms keeps the boundary case (the
+    watermark landing exactly on ``due_us``) firing, and an early fire is
+    harmless because every caller's flush predicate re-checks due <= wm
+    and re-arms. GroupState rejects a timestamp that is not beyond the
+    current watermark: pass ``wm_us`` to keep the timer past it."""
+    early = due_us // 1000 - 1
+    return early if wm_us is None else max(early, wm_us // 1000 + 1)
+
+
+def _gap_sessions(
+    buf: list[tuple[int, float]], gap_us: int
+) -> list[tuple[int, int, int, float]]:
+    """(ts_us, v) buffer → [(start_us, last_us, n, total)], gap-split
+    (break at inactivity >= gap, matching session_window merging)."""
+    out: list[tuple[int, int, int, float]] = []
+    for t, v in sorted(buf):
+        if out and t - out[-1][1] < gap_us:
+            s, last, n, tot = out[-1]
+            out[-1] = (s, t, n + 1, tot + v)
+        else:
+            out.append((t, t, 1, v))
+    return out
+
+
+def _finalize_sessions(buf: list[tuple[int, float]], gap_us: int, wm_us: int):
+    """Split the buffer's sessions into those the watermark finalized
+    ("onTimer": wm passed last + gap) and the rows of the pending ones."""
+    done, keep = [], []
+    for s, last, n, tot in _gap_sessions(buf, gap_us):
+        if last + gap_us <= wm_us:
+            done.append((s, last, n, tot))
+        else:
+            keep.extend((t, v) for t, v in buf if s <= t <= last)
+    return done, keep
+
+
+def _session_frame(key_col: str, key, done, gap_us: int) -> pd.DataFrame:
+    """(key, session_start, session_end, n, total) rows of the finalized
+    sessions — session_end = last + gap, exactly session_window's bound."""
+    return pd.DataFrame(
+        {
+            key_col: [key[0]] * len(done),
+            "session_start": pd.to_datetime([d[0] for d in done], unit="us"),
+            "session_end": pd.to_datetime(
+                [d[1] + gap_us for d in done], unit="us"
+            ),
+            "n": [d[2] for d in done],
+            "total": [d[3] for d in done],
+        }
+    )
+
+
+def _session_schema(src: DataFrame, key_col: str) -> str:
+    return (
+        f"{key_col} {_dt(src, key_col)}, session_start timestamp, "
+        "session_end timestamp, n bigint, total double"
+    )
+
+
 def timer_session_agg(
     events: DataFrame,
     key_col: str,
@@ -736,85 +727,33 @@ def timer_session_agg(
     timer. Scale-safe at high key cardinality: RocksDB-backed state.
     """
     gap_us = _interval_ms(gap) * 1000  # µs state: events carry sub-ms ts
-    src = events.select(key_col, ts_col, value_col).withWatermark(
-        ts_col, delay
-    )
-    k_dt = _dt(src, key_col)
-    out_schema = (
-        f"{key_col} {k_dt}, session_start timestamp, "
-        "session_end timestamp, n bigint, total double"
-    )
-    out_names = [key_col, "session_start", "session_end", "n", "total"]
-    state_fields = "ts_us array<bigint>, v array<double>"
-
-    def _sessions(buf: list[tuple[int, float]]):
-        """Sorted buffer → [(start_us, last_us, n, total)], gap-split
-        (break at inactivity >= gap, matching session_window merging)."""
-        out: list[tuple[int, int, int, float]] = []
-        for t, v in sorted(buf):
-            if out and t - out[-1][1] < gap_us:
-                s, last, n, tot = out[-1]
-                out[-1] = (s, t, n + 1, tot + v)
-            else:
-                out.append((t, t, 1, v))
-        return out
+    src = events.select(
+        key_col, ts_col, F.col(value_col).cast("double").alias(value_col)
+    ).withWatermark(ts_col, delay)
+    rows = RowState(src, [ts_col, value_col], epoch=ts_col)
 
     def fn(key, batches: Iterator[pd.DataFrame], state: GroupState):
-        buf: list[tuple[int, float]] = []
-        if state.exists:
-            ts_list, v_list = state.get
-            buf = list(zip(ts_list, v_list))
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            us = pdf[ts_col].values.astype("datetime64[us]").astype("int64")
-            buf.extend(
-                (int(t), float(v)) for t, v in zip(us, pdf[value_col])
-            )
+        frame = rows.extend(rows.load(state), batches)
+        buf = list(zip(frame[ts_col], frame[value_col]))
         wm_us = state.getCurrentWatermarkMs() * 1000
-        done, keep = [], []
-        for s, last, n, tot in _sessions(buf):
-            if last + gap_us <= wm_us:  # "onTimer": wm passed the end
-                done.append((s, last, n, tot))
-            else:
-                keep.extend((t, v) for t, v in buf if s <= t <= last)
+        done, keep = _finalize_sessions(buf, gap_us, wm_us)
         if keep:
-            state.update(([t for t, _ in keep], [v for _, v in keep]))
+            rows.save(state, pd.DataFrame(keep, columns=rows.cols))
             # re-arm at the earliest pending finalization point
-            # (registerEventTimeTimer), 1 ms EARLY: Spark fires event-time
-            # timeouts only when the watermark STRICTLY exceeds the set
-            # timestamp, while Flink's onTimer fires at wm >= t — arming
-            # at end-1ms keeps the boundary case (watermark landing
-            # exactly on a session end) firing, and an early fire is
-            # harmless because the flush predicate re-checks end <= wm
-            # and re-arms. Must still be beyond the current watermark.
-            nxt = min(last + gap_us for _, last, _, _ in _sessions(keep))
-            state.setTimeoutTimestamp(
-                max(nxt // 1000 - 1, wm_us // 1000 + 1)
+            # (registerEventTimeTimer)
+            nxt = min(
+                last + gap_us for _, last, _, _ in _gap_sessions(keep, gap_us)
             )
+            state.setTimeoutTimestamp(_timer_ms(nxt, wm_us))
         else:
             state.remove()
         if done:
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]] * len(done),
-                    "session_start": pd.to_datetime(
-                        [d[0] for d in done], unit="us"
-                    ),
-                    "session_end": pd.to_datetime(
-                        [d[1] + gap_us for d in done], unit="us"
-                    ),
-                    "n": [d[2] for d in done],
-                    "total": [d[3] for d in done],
-                }
-            )
-        else:
-            yield pd.DataFrame({c: [] for c in out_names})
+            yield _session_frame(key_col, key, done, gap_us)
 
     return src.groupBy(key_col).applyInPandasWithState(
         fn,
-        outputStructType=out_schema,
-        stateStructType=state_fields,
+        outputStructType=_session_schema(src, key_col),
+        stateStructType=rows.schema,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
@@ -862,37 +801,6 @@ def timer_session_agg_tws(
     src = events.select(key_col, ts_col, value_col).withWatermark(
         ts_col, delay
     )
-    k_dt = _dt(src, key_col)
-    out_schema = (
-        f"{key_col} {k_dt}, session_start timestamp, "
-        "session_end timestamp, n bigint, total double"
-    )
-    out_names = [key_col, "session_start", "session_end", "n", "total"]
-
-    def _sessions(buf):
-        out = []
-        for t, v in sorted(buf):
-            if out and t - out[-1][1] < gap_us:
-                s, last, n, tot = out[-1]
-                out[-1] = (s, t, n + 1, tot + v)
-            else:
-                out.append((t, t, 1, v))
-        return out
-
-    def _emit(key, done):
-        return pd.DataFrame(
-            {
-                key_col: [key[0]] * len(done),
-                "session_start": pd.to_datetime(
-                    [d[0] for d in done], unit="us"
-                ),
-                "session_end": pd.to_datetime(
-                    [d[1] + gap_us for d in done], unit="us"
-                ),
-                "n": [d[2] for d in done],
-                "total": [d[3] for d in done],
-            }
-        )
 
     class SessionTimers(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -904,9 +812,7 @@ def timer_session_agg_tws(
 
         def _sync_timers(self, pending):
             """One event-time timer per pending session end (ms)."""
-            # 1 ms early (the GroupState form's boundary rule): firing
-            # early is harmless, _finalize re-checks end <= wm
-            want = {(last + gap_us) // 1000 - 1 for _, last, _, _ in pending}
+            want = {_timer_ms(last + gap_us) for _, last, _, _ in pending}
             have = set(self._h.listTimers())
             for ts in have - want:
                 self._h.deleteTimer(ts)
@@ -914,19 +820,14 @@ def timer_session_agg_tws(
                 self._h.registerTimer(ts)
 
         def _finalize(self, key, wm_us):
-            buf = self._load()
-            done, keep = [], []
-            for s, last, n, tot in _sessions(buf):
-                if last + gap_us <= wm_us:
-                    done.append((s, last, n, tot))
-                else:
-                    keep.extend((t, v) for t, v in buf if s <= t <= last)
+            done, keep = _finalize_sessions(self._load(), gap_us, wm_us)
             if keep:
                 self._buf.put([(t, v) for t, v in keep])
             else:
                 self._buf.clear()
-            self._sync_timers(_sessions(keep))
-            return done
+            self._sync_timers(_gap_sessions(keep, gap_us))
+            if done:
+                yield _session_frame(key_col, key, done, gap_us)
 
         def handleInputRows(self, key, rows, timerValues):
             buf = self._load()
@@ -942,29 +843,103 @@ def timer_session_agg_tws(
                 )
             self._buf.put([(t, v) for t, v in buf])
             wm_us = timerValues.getCurrentWatermarkInMs() * 1000
-            done = self._finalize(key, wm_us)
-            yield _emit(key, done) if done else pd.DataFrame(
-                {c: [] for c in out_names}
-            )
+            yield from self._finalize(key, wm_us)
 
         def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
             wm_us = max(
                 timerValues.getCurrentWatermarkInMs(),
                 expiredTimerInfo.getExpiryTimeInMs(),
             ) * 1000
-            done = self._finalize(key, wm_us)
-            yield _emit(key, done) if done else pd.DataFrame(
-                {c: [] for c in out_names}
-            )
+            yield from self._finalize(key, wm_us)
 
         def close(self) -> None:
             pass
 
     return src.groupBy(key_col).transformWithStateInPandas(
         statefulProcessor=SessionTimers(),
-        outputStructType=out_schema,
+        outputStructType=_session_schema(src, key_col),
         outputMode="Append",
         timeMode="EventTime",
+    )
+
+
+def _keyed_sessions(
+    events: DataFrame,
+    key_col: str,
+    ts_col: str,
+    turn_col: str,
+    order_col: str,
+    gap: str,
+    delay: str,
+    out_schema: str,
+    emit: Callable[[Any, int, list], Iterator[pd.DataFrame]],
+) -> DataFrame:
+    """Session machinery of :func:`session_transcripts` and
+    :func:`stream_sft_loss_mask`: rows buffer per key as (ts, order,
+    turn); each call finalizes every gap-split session whose ``last +
+    gap`` the watermark has passed and hands them, each a (ts, order)-
+    sorted list of ``(ts_us, order, turn)`` rows, to ``emit(key, n_done,
+    done)`` — ``n_done`` counts the key's sessions finalized before.
+    Sessions finalize in start-time order per key (an earlier session's
+    end always passes the watermark first), so ``n_done + i + 1`` equals
+    the batch formulation's running-sum session id.
+
+    State per key = the un-finalized tail + the ordinal counter + one
+    timer — watermark-bounded exactly as timer_session_agg.
+    """
+    gap_us = _interval_ms(gap) * 1000
+    src = events.select(key_col, ts_col, order_col, turn_col).withWatermark(
+        ts_col, delay
+    )
+    rows = RowState(
+        src, [ts_col, order_col, turn_col], scalars="n_done bigint",
+        epoch=ts_col,
+    )
+
+    def _split(buf: list[tuple[int, int, str]]):
+        """Sorted buffer → list of sessions (each a list of rows)."""
+        out: list[list[tuple[int, int, str]]] = []
+        for row in sorted(buf):
+            if out and row[0] - out[-1][-1][0] <= gap_us:
+                out[-1].append(row)
+            else:
+                out.append([row])
+        return out
+
+    def fn(key, batches: Iterator[pd.DataFrame], state: GroupState):
+        frame, n_done = rows.load(state, 0)
+        frame = rows.extend(frame, batches)
+        buf = [
+            (int(t), int(o), str(v))
+            for t, o, v in zip(
+                frame[ts_col], frame[order_col], frame[turn_col]
+            )
+        ]
+        wm_us = state.getCurrentWatermarkMs() * 1000
+        done, pending = [], []
+        for sess in _split(buf):
+            (done if sess[-1][0] + gap_us <= wm_us else pending).append(sess)
+        if pending or done:
+            # a key may still receive rows later: keep the ordinal counter
+            tail = [row for sess in pending for row in sess]
+            rows.save(
+                state, pd.DataFrame(tail, columns=rows.cols),
+                n_done + len(done),
+            )
+            state.setTimeoutTimestamp(
+                _timer_ms(min(s[-1][0] + gap_us for s in pending), wm_us)
+                if pending
+                else wm_us // 1000 + 3_600_000
+            )
+        if done:
+            yield from emit(key[0], n_done, done)
+
+    return src.groupBy(key_col).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=rows.schema,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
 
@@ -997,101 +972,28 @@ def session_transcripts(
     State per key = the un-finalized tail + one counter + one timer —
     watermark-bounded exactly as timer_session_agg.
     """
-    gap_us = _interval_ms(gap) * 1000
-    src = events.select(key_col, ts_col, order_col, turn_col).withWatermark(
-        ts_col, delay
-    )
-    k_dt = _dt(src, key_col)
     out_schema = (
-        f"{key_col} {k_dt}, session_n bigint, n_turns bigint, "
+        f"{key_col} {_dt(events, key_col)}, session_n bigint, n_turns bigint, "
         "first_ts timestamp, last_ts timestamp, transcript string"
     )
-    out_names = [
-        key_col, "session_n", "n_turns", "first_ts", "last_ts", "transcript"
-    ]
-    state_fields = (
-        "n_done bigint, ts_us array<bigint>, ord array<bigint>, "
-        "turn array<string>"
-    )
 
-    def _split(buf: list[tuple[int, int, str]]):
-        """Sorted buffer → list of sessions (each a list of rows)."""
-        out: list[list[tuple[int, int, str]]] = []
-        for row in sorted(buf):
-            if out and row[0] - out[-1][-1][0] <= gap_us:
-                out[-1].append(row)
-            else:
-                out.append([row])
-        return out
+    def emit(key, n_done, done):
+        yield pd.DataFrame(
+            {
+                key_col: [key] * len(done),
+                "session_n": [n_done + i + 1 for i in range(len(done))],
+                "n_turns": [len(s) for s in done],
+                "first_ts": pd.to_datetime([s[0][0] for s in done], unit="us"),
+                "last_ts": pd.to_datetime([s[-1][0] for s in done], unit="us"),
+                "transcript": [
+                    " ".join(v for _, _, v in s[:max_turns]) for s in done
+                ],
+            }
+        )
 
-    def fn(key, batches: Iterator[pd.DataFrame], state: GroupState):
-        n_done = 0
-        buf: list[tuple[int, int, str]] = []
-        if state.exists:
-            n_done, ts_list, ord_list, turn_list = state.get
-            buf = list(zip(ts_list, ord_list, turn_list))
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            us = pdf[ts_col].values.astype("datetime64[us]").astype("int64")
-            buf.extend(
-                (int(t), int(o), str(v))
-                for t, o, v in zip(us, pdf[order_col], pdf[turn_col])
-            )
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        done, keep = [], []
-        for sess in _split(buf):
-            if sess[-1][0] + gap_us <= wm_us:
-                done.append(sess)
-            else:
-                keep.extend(sess)
-        if keep:
-            state.update(
-                (
-                    n_done + len(done),
-                    [t for t, _, _ in keep],
-                    [o for _, o, _ in keep],
-                    [v for _, _, v in keep],
-                )
-            )
-            nxt = min(s[-1][0] + gap_us for s in _split(keep))
-            # 1 ms early — see timer_session_agg's boundary rule
-            state.setTimeoutTimestamp(
-                max(nxt // 1000 - 1, wm_us // 1000 + 1)
-            )
-        elif done:
-            # key may still receive rows later: keep the ordinal counter
-            state.update((n_done + len(done), [], [], []))
-            state.setTimeoutTimestamp(wm_us // 1000 + 3_600_000)
-        if done:
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]] * len(done),
-                    "session_n": [
-                        n_done + i + 1 for i in range(len(done))
-                    ],
-                    "n_turns": [len(s) for s in done],
-                    "first_ts": pd.to_datetime(
-                        [s[0][0] for s in done], unit="us"
-                    ),
-                    "last_ts": pd.to_datetime(
-                        [s[-1][0] for s in done], unit="us"
-                    ),
-                    "transcript": [
-                        " ".join(v for _, _, v in s[:max_turns])
-                        for s in done
-                    ],
-                }
-            )
-        else:
-            yield pd.DataFrame({c: [] for c in out_names})
-
-    return src.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_fields,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _keyed_sessions(
+        events, key_col, ts_col, turn_col, order_col, gap, delay,
+        out_schema, emit,
     )
 
 
@@ -1122,36 +1024,25 @@ def stream_gap_fill(
     receives no further data.
     """
     gap_us = bucket_ms * 1000
-    src = events.select(key_col, ts_col, value_col).withWatermark(
-        ts_col, delay
-    )
+    src = events.select(
+        key_col, ts_col, F.col(value_col).cast("double").alias(value_col)
+    ).withWatermark(ts_col, delay)
     k_dt = _dt(src, key_col)
     out_schema = (
         f"{key_col} {k_dt}, bucket timestamp, "
         f"{value_col} double, filled boolean"
     )
-    out_names = [key_col, "bucket", value_col, "filled"]
-    state_fields = (
-        "last_bucket_us bigint, carry double, "
-        "ts_us array<bigint>, v array<double>"
+    rows = RowState(
+        src, [ts_col, value_col],
+        scalars="last_bucket_us bigint, carry double", epoch=ts_col,
     )
 
     def fn(key, batches: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            last_us, carry, ts_list, v_list = state.get
-            buf = sorted(zip(ts_list, v_list))
-        else:
-            last_us, carry, buf = -1, None, []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            us = pdf[ts_col].values.astype("datetime64[us]").astype("int64")
-            buf.extend(
-                (int(t), float(v)) for t, v in zip(us, pdf[value_col])
-            )
-        buf.sort()
+        frame, last_us, carry = rows.load(state, -1, None)
+        frame = rows.extend(frame, batches)
+        buf = sorted(zip(frame[ts_col], frame[value_col]))
         wm_us = state.getCurrentWatermarkMs() * 1000
-        rows = []
+        out = []
         if buf or last_us >= 0:
             start = (
                 last_us + gap_us
@@ -1168,44 +1059,32 @@ def stream_gap_fill(
                         observed = True
                     i += 1
                 if carry is not None:
-                    rows.append((b, carry, not observed))
+                    out.append((b, carry, not observed))
                     last_us = b
                 b += gap_us
             buf = buf[i:]
-        state.update(
-            (
-                last_us,
-                carry,
-                [t for t, _ in buf],
-                [v for _, v in buf],
-            )
-        )
+        rows.save(state, pd.DataFrame(buf, columns=rows.cols), last_us, carry)
         if last_us >= 0 or buf:
             nxt = (last_us + 2 * gap_us) if last_us >= 0 else (
                 (buf[0][0] // gap_us) * gap_us + gap_us
             )
-            # 1 ms early — see timer_session_agg's boundary rule
-            state.setTimeoutTimestamp(
-                max(nxt // 1000 - 1, wm_us // 1000 + 1)
-            )
-        if rows:
+            state.setTimeoutTimestamp(_timer_ms(nxt, wm_us))
+        if out:
             yield pd.DataFrame(
                 {
-                    key_col: [key[0]] * len(rows),
+                    key_col: [key[0]] * len(out),
                     "bucket": pd.to_datetime(
-                        [r[0] for r in rows], unit="us"
+                        [r[0] for r in out], unit="us"
                     ),
-                    value_col: [r[1] for r in rows],
-                    "filled": [r[2] for r in rows],
+                    value_col: [r[1] for r in out],
+                    "filled": [r[2] for r in out],
                 }
             )
-        else:
-            yield pd.DataFrame({c: [] for c in out_names})
 
     return src.groupBy(key_col).applyInPandasWithState(
         fn,
         outputStructType=out_schema,
-        stateStructType=state_fields,
+        stateStructType=rows.schema,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
@@ -1251,7 +1130,6 @@ def stream_ewma_anomaly(
         f"{key_col} {k_dt}, bucket_ts timestamp, x double, "
         "smoothed double, residual double, anomaly boolean"
     )
-    out_names = [key_col, "bucket_ts", "x", "smoothed", "residual", "anomaly"]
     state_fields = (
         "has_s boolean, s double, b_us array<bigint>, cents array<bigint>"
     )
@@ -1285,10 +1163,8 @@ def stream_ewma_anomaly(
             (has_s, s_prev, list(pend.keys()), list(pend.values()))
         )
         if pend:
-            nxt = min(pend) + bucket_us
-            # 1 ms early — see timer_session_agg's boundary rule
             state.setTimeoutTimestamp(
-                max(nxt // 1000 - 1, wm_us // 1000 + 1)
+                _timer_ms(min(pend) + bucket_us, wm_us)
             )
         if rows:
             yield pd.DataFrame(
@@ -1305,8 +1181,6 @@ def stream_ewma_anomaly(
                     "anomaly": [r[4] for r in rows],
                 }
             )
-        else:
-            yield pd.DataFrame({c: [] for c in out_names})
 
     return src.groupBy(key_col).applyInPandasWithState(
         fn,
@@ -1339,72 +1213,13 @@ def stream_sft_loss_mask(
     ordered turns, so finalized rows equal the batch operator's exactly.
     State per key = the un-finalized tail + one ordinal + one timer.
     """
-    gap_us = _interval_ms(gap) * 1000
     u_len, a_len = len(user_tag), len(assistant_tag)
-    src = events.select(key_col, ts_col, order_col, turn_col).withWatermark(
-        ts_col, delay
-    )
-    k_dt = _dt(src, key_col)
     out_schema = (
-        f"{key_col} {k_dt}, session_n bigint, turn_idx int, "
+        f"{key_col} {_dt(events, key_col)}, session_n bigint, turn_idx int, "
         "mask_start bigint, mask_end bigint, render_len bigint"
     )
-    out_names = [
-        key_col, "session_n", "turn_idx",
-        "mask_start", "mask_end", "render_len",
-    ]
-    state_fields = (
-        "n_done bigint, ts_us array<bigint>, ord array<bigint>, "
-        "turn array<string>"
-    )
 
-    def _split(buf):
-        out = []
-        for row in sorted(buf):
-            if out and row[0] - out[-1][-1][0] <= gap_us:
-                out[-1].append(row)
-            else:
-                out.append([row])
-        return out
-
-    def fn(key, batches: Iterator[pd.DataFrame], state: GroupState):
-        n_done = 0
-        buf: list[tuple[int, int, str]] = []
-        if state.exists:
-            n_done, ts_list, ord_list, turn_list = state.get
-            buf = list(zip(ts_list, ord_list, turn_list))
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            us = pdf[ts_col].values.astype("datetime64[us]").astype("int64")
-            buf.extend(
-                (int(t), int(o), str(v))
-                for t, o, v in zip(us, pdf[order_col], pdf[turn_col])
-            )
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        done, keep = [], []
-        for sess in _split(buf):
-            if sess[-1][0] + gap_us <= wm_us:
-                done.append(sess)
-            else:
-                keep.extend(sess)
-        if keep:
-            state.update(
-                (
-                    n_done + len(done),
-                    [t for t, _, _ in keep],
-                    [o for _, o, _ in keep],
-                    [v for _, _, v in keep],
-                )
-            )
-            nxt = min(s[-1][0] + gap_us for s in _split(keep))
-            # 1 ms early — see timer_session_agg's boundary rule
-            state.setTimeoutTimestamp(
-                max(nxt // 1000 - 1, wm_us // 1000 + 1)
-            )
-        elif done:
-            state.update((n_done + len(done), [], [], []))
-            state.setTimeoutTimestamp(wm_us // 1000 + 3_600_000)
+    def emit(key, n_done, done):
         rows = []
         for i, sess in enumerate(done):
             render_len = sum(
@@ -1426,7 +1241,7 @@ def stream_sft_loss_mask(
         if rows:
             yield pd.DataFrame(
                 {
-                    key_col: [key[0]] * len(rows),
+                    key_col: [key] * len(rows),
                     "session_n": [r[0] for r in rows],
                     "turn_idx": pd.Series(
                         [r[1] for r in rows], dtype="int32"
@@ -1436,13 +1251,8 @@ def stream_sft_loss_mask(
                     "render_len": [r[4] for r in rows],
                 }
             )
-        else:
-            yield pd.DataFrame({c: [] for c in out_names})
 
-    return src.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_fields,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _keyed_sessions(
+        events, key_col, ts_col, turn_col, order_col, gap, delay,
+        out_schema, emit,
     )

@@ -142,9 +142,7 @@ def test_keyed_top_n_state_matches_batch(spark, events_stream, t):
         rank_col="rank",
     ).select("user_id", "rank", "value", "event_id")
 
-    got = {(r["user_id"], r["rank"], r["value"]) for r in final.collect()}
-    want = {(r["user_id"], r["rank"], r["value"]) for r in batch.collect()}
-    assert got == want
+    assert set(map(tuple, final.collect())) == set(map(tuple, batch.collect()))
 
 
 def test_streaming_iterate_unbounded_loop(spark):
