@@ -12,8 +12,13 @@ program shape::
 maps here to::
 
     t_env = TableEnvironment.create()
-    t_env.create_table("src", path="/data/src.parquet")      # or DDL WITH-style
+    t_env.create_table("src", path="/data/src.parquet")      # or the DDL above
     t_env.sql_query("SELECT ...").collect()                  # a plain DataFrame
+
+``execute_sql`` and ``sql_query`` run statement text through
+``sql_client.execute``, the one statement path the SQL client and the REST
+gateway share: the Flink-dialect DDL, SET/RESET, statement sets, EXPLAIN /
+COMPILE PLAN and window-TVF queries all work here as they do there.
 
 Everything returns ordinary PySpark DataFrames — the engine IS Spark; the
 facade only provides the reference's ergonomics (catalog registration,
@@ -115,12 +120,16 @@ class TableEnvironment:
 
     def sql_query(self, sql: str) -> DataFrame:
         """≈ sqlQuery(...) — returns the lazily-planned Table (DataFrame)."""
-        return self.spark.sql(sql)
+        return self.execute_sql(sql)
 
     def execute_sql(self, sql: str) -> DataFrame:
-        """≈ executeSql(...) — same as sql_query here (DDL goes through
-        Spark SQL directly; DML returns its result DataFrame)."""
-        return self.spark.sql(sql)
+        """≈ executeSql(...) — runs one statement (or STATEMENT SET block)
+        through ``sql_client.execute``: DDL/DML/SET execute eagerly and
+        return a ``result`` frame of ``OK`` rows, a query returns its
+        DataFrame."""
+        from flink_psl_spark.sql_client import execute
+
+        return execute(self.spark, sql).df
 
     # -- functions ---------------------------------------------------------
 

@@ -8,12 +8,14 @@ CancelOperationHeaders, CloseSessionHeaders, GetInfoHeaders "/info",
 GetApiVersionHeaders "/api_versions"; response shapes in rest/message/*,
 e.g. FetchResultsResponseBody {results, resultType, nextResultUri}).
 
-Spark-first design: the gateway is a thin REST shell over ``spark.sql`` —
-Catalyst does all planning/execution; this module supplies only the service
-semantics the reference adds on top of its engine: session lifecycle with
-per-session config scoping (SET/RESET restored on close), operation handles
-with a status lifecycle (PENDING → RUNNING → FINISHED/ERROR/CANCELED),
-token-paginated result fetch with ``nextResultUri``, and JSON row encoding.
+Spark-first design: the gateway is a thin REST shell over
+``sql_client.execute``, the one statement path it shares with the SQL client
+and TableEnvironment — Catalyst does all planning/execution; this module
+supplies only the service semantics the reference adds on top of its
+engine: session lifecycle with per-session config scoping (SET/RESET
+restored on close), operation handles with a status lifecycle (PENDING →
+RUNNING → FINISHED/ERROR/CANCELED), token-paginated result fetch with
+``nextResultUri``, and JSON row encoding.
 Runs in-process on ``http.server`` (stdlib only) — a user of the reference's
 ``sql-gateway -Dsql-gateway.endpoint.rest.port=…`` can point the same REST
 calls at this service.
@@ -28,7 +30,6 @@ fully distributed and return only a row count here.
 from __future__ import annotations
 
 import json
-import re
 import threading
 import uuid
 from dataclasses import dataclass, field
@@ -38,7 +39,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
 
-from flink_psl_spark.sql_client import _RESET_RE, _SET_RE
+from flink_psl_spark.sql_client import execute
 
 API_VERSIONS = ["V1", "V2"]
 PRODUCT_NAME = "flink-psl-spark SQL Gateway"
@@ -120,7 +121,9 @@ class SqlGatewayService:
         with self._lock:
             self.sessions[handle] = sess
         for k, v in list(sess.properties.items()):
-            self._set_conf(sess, k, v)
+            replaced = self.spark.conf.get(k, None)
+            self.spark.conf.set(k, v)
+            self._track(sess, k, replaced, v)
         return handle
 
     def close_session(self, handle: str) -> None:
@@ -146,20 +149,11 @@ class SqlGatewayService:
         except KeyError:
             raise KeyError(f"Session '{handle}' does not exist") from None
 
-    def _set_conf(self, sess: Session, key: str, val: str | None) -> None:
-        if key not in sess.overridden:
-            try:
-                prev = self.spark.conf.get(key)
-            except Exception:
-                prev = None
-            sess.overridden[key] = prev
-        if val is None:
-            try:
-                self.spark.conf.unset(key)
-            except Exception:
-                pass
-        else:
-            self.spark.conf.set(key, val)
+    @staticmethod
+    def _track(sess: Session, key: str, replaced: str | None, val: str | None) -> None:
+        """Record a session-scoped conf change: the first value it replaced
+        is what close_session restores."""
+        sess.overridden.setdefault(key, replaced)
         sess.properties.pop(key, None)
         if val is not None:
             sess.properties[key] = val
@@ -183,96 +177,21 @@ class SqlGatewayService:
                 self.spark.sparkContext.setJobGroup(
                     op.handle, statement[:200], interruptOnCancel=True
                 )
-                stmt = statement.strip().rstrip(";")
-                m = _SET_RE.match(stmt)
-                if m:
-                    self._set_conf(sess, m.group("key"), m.group("val"))
-                    op.columns = [
-                        {"name": "result", "logicalType": {"type": "VARCHAR"}}
-                    ]
-                    op.rows = [["OK"]]
-                else:
-                    m = _RESET_RE.match(stmt)
-                    from flink_psl_spark.sql_client import (
-                        _group_statement_sets,
-                        split_statements,
-                    )
-
-                    is_stmt_set = bool(
-                        re.match(
-                            r"^\s*EXECUTE\s+STATEMENT\s+SET\b",
-                            stmt,
-                            re.IGNORECASE,
-                        )
-                    )
-                    if m:
-                        self._set_conf(sess, m.group("key"), None)
-                        op.columns = [
-                            {"name": "result", "logicalType": {"type": "VARCHAR"}}
-                        ]
-                        op.rows = [["OK"]]
-                    elif is_stmt_set:
-                        # reference SqlGateway accepts STATEMENT SET blocks
-                        # through the statements endpoint — all inner
-                        # INSERTs run under this one operation
-                        grouped = _group_statement_sets(
-                            split_statements(statement)
-                        )
-                        if len(grouped) != 1 or not isinstance(
-                            grouped[0], list
-                        ):
-                            raise ValueError(
-                                "executeStatement accepts exactly one "
-                                "statement; submit content outside the "
-                                "STATEMENT SET block separately"
-                            )
-                        inner = grouped[0]
-                        for ins in inner:
-                            self.spark.sql(ins)
-                        op.columns = [
-                            {"name": "result", "logicalType": {"type": "VARCHAR"}}
-                        ]
-                        op.rows = [["OK"] for _ in inner] or [["OK"]]
-                    else:
-                        from flink_psl_spark.plans import maybe_plan_statement
-                        from flink_psl_spark.temporal_sql import rewrite_flink_sql
-
-                        # EXPLAIN (detail flags) / COMPILE PLAN / EXECUTE
-                        # PLAN run through the plan-statement dialect, as
-                        # on the reference gateway's statement endpoint
-                        handled = maybe_plan_statement(self.spark, stmt)
-                        if handled is not None:
-                            df = handled[1]
-                        else:
-                            rewritten = rewrite_flink_sql(stmt)
-                            if isinstance(rewritten, list):
-                                for r in rewritten:
-                                    df = self.spark.sql(r)
-                            else:
-                                df = self.spark.sql(rewritten)
-                        op.is_query = bool(df.schema.fields)
-                        op.columns = [
-                            {
-                                "name": f.name,
-                                "logicalType": {
-                                    "type": f.dataType.simpleString().upper()
-                                },
-                            }
-                            for f in df.schema.fields
-                        ]
-                        if op.is_query:
-                            op.rows = [
-                                [_json_value(v) for v in row]
-                                for row in df.collect()
-                            ]
-                        else:
-                            op.rows = [["OK"]]
-                            op.columns = [
-                                {
-                                    "name": "result",
-                                    "logicalType": {"type": "VARCHAR"},
-                                }
-                            ]
+                res = execute(self.spark, statement)
+                if res.kind == "set":
+                    val = self.spark.conf.get(res.key)
+                    self._track(sess, res.key, res.replaced, val)
+                elif res.kind == "reset":
+                    self._track(sess, res.key, res.replaced, None)
+                op.is_query = res.kind == "query"
+                op.columns = [
+                    {
+                        "name": f.name,
+                        "logicalType": {"type": f.dataType.simpleString().upper()},
+                    }
+                    for f in res.df.schema.fields
+                ]
+                op.rows = [[_json_value(v) for v in row] for row in res.df.collect()]
                 if op.status == RUNNING:  # a cancel may have raced us
                     op.status = FINISHED
             except Exception as e:  # surfaced via operation status

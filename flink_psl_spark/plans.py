@@ -467,17 +467,12 @@ def explain_statement(
     job; Spark plans per action, so the reports are per-INSERT)."""
     from flink_psl_spark.temporal_sql import rewrite_flink_sql
 
-    details = [d.upper() for d in (details or [])]
-    if re.match(
-        r"^\s*(?:EXECUTE\s+)?STATEMENT\s+SET\s+BEGIN\b", statement, re.IGNORECASE
-    ):
-        from flink_psl_spark.sql_client import (
-            _group_statement_sets,
-            split_statements,
-        )
+    from flink_psl_spark.sql_client import entries
 
-        grouped = _group_statement_sets(split_statements(statement))
-        if len(grouped) != 1 or not isinstance(grouped[0], list):
+    details = [d.upper() for d in (details or [])]
+    grouped = entries(statement)
+    if any(isinstance(e, list) for e in grouped):
+        if len(grouped) != 1:
             raise ValueError("EXPLAIN accepts exactly one STATEMENT SET block")
         return "\n\n".join(
             f"-- statement {i + 1} --\n"
@@ -658,30 +653,25 @@ def execute_plan(spark: SparkSession, path: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# statement dispatch (SQL client + gateway share this)
+# statement dispatch (sql_client.execute calls this)
 # ---------------------------------------------------------------------------
 
 def maybe_plan_statement(
     spark: SparkSession, stmt: str
-) -> tuple[str, DataFrame] | None:
+) -> tuple[str, DataFrame | None] | None:
     """Handle EXPLAIN / COMPILE PLAN / EXECUTE PLAN statements; return
-    (kind, result DataFrame) or None for statements this module does not
-    own (including Spark-native-mode EXPLAIN, which passes through)."""
+    (kind, result DataFrame, or None when the statement has no rows of its
+    own) or None for statements this module does not own (including
+    Spark-native-mode EXPLAIN, which passes through)."""
     m = _EXECUTE_RE.match(stmt)
     if m:
-        df = execute_plan(spark, m.group("path"))
-        ok = spark.createDataFrame([("OK",)], "result string")
-        return "execute_plan", (df if df is not None and df.schema.fields else ok)
+        return "execute_plan", execute_plan(spark, m.group("path"))
     m = _COMPILE_RE.match(stmt)
     if m:
         compile_plan(spark, m.group("path"), m.group("stmt"))
-        ok = spark.createDataFrame([("OK",)], "result string")
         if m.group("and_exec"):
-            df = execute_plan(spark, m.group("path"))
-            return "compile_plan", (
-                df if df is not None and df.schema.fields else ok
-            )
-        return "compile_plan", ok
+            return "compile_plan", execute_plan(spark, m.group("path"))
+        return "compile_plan", None
     parsed = parse_explain(stmt)
     if parsed is not None:
         details, inner = parsed

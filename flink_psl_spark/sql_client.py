@@ -8,17 +8,23 @@ splitting that respects quotes/comments, SET/RESET handling against the
 session conf, and per-statement results — so a user can port a
 ``sql-client -f job.sql`` invocation directly.
 
+``execute`` is the one statement path: the script runner, the REST
+gateway (gateway.py) and TableEnvironment (api.py) all classify and run
+statement text through it, so they differ only in how the text arrives.
+
 Statement coverage (the dialect layer's single source of truth):
 
 - **Rewritten here / in ddl.py / temporal_sql.py / plans.py**:
-  ``SET``/``RESET``, ``EXECUTE STATEMENT SET BEGIN … END``,
+  ``SET``/``RESET``, ``[EXECUTE] STATEMENT SET BEGIN … END``,
   ``EXPLAIN [(ESTIMATED_COST|CHANGELOG_MODE|PLAN_ADVICE|``
   ``JSON_EXECUTION_PLAN)] [PLAN FOR]``, ``COMPILE [AND EXECUTE] PLAN …
   FOR …`` / ``EXECUTE PLAN …`` (plans.py), reference
   DDL (``CREATE TABLE … WITH (connector=…)``), group windows
   (``TUMBLE``/``HOP``/``SESSION``), window TVFs
-  (``TABLE(TUMBLE|HOP|CUMULATE(...))``), ``FOR SYSTEM_TIME AS OF``,
-  ``MATCH_RECOGNIZE`` (match_recognize_sql.py).
+  (``TABLE(TUMBLE|HOP|CUMULATE(...))``), ``FOR SYSTEM_TIME AS OF``.
+- **Not a statement here**: ``MATCH_RECOGNIZE`` is not routed through
+  this path; match_recognize_sql.py applies a clause to a DataFrame
+  (``match_recognize_sql(df, clause)``).
 - **Pass-through** (Spark SQL runs them natively, same syntax):
   ``SHOW TABLES/DATABASES/FUNCTIONS/VIEWS``, ``DESCRIBE``, ``USE``,
   ``ANALYZE TABLE``, ``CREATE/DROP VIEW``, ``INSERT``, queries.
@@ -39,6 +45,9 @@ import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from flink_psl_spark.plans import EXPLAIN_DETAILS, maybe_plan_statement
+from flink_psl_spark.temporal_sql import rewrite_flink_sql
 
 
 def split_statements(script: str) -> list[str]:
@@ -89,31 +98,36 @@ _RESET_RE = re.compile(r"^RESET\s+'?(?P<key>[^'\s]+)'?\s*$", re.IGNORECASE)
 @dataclass
 class StatementResult:
     statement: str
-    kind: str  # set | reset | query | statement_set
-    df: DataFrame | None = None
+    # query | set | reset | statement_set | explain | compile_plan | execute_plan
+    kind: str
+    df: DataFrame
+    # SET / RESET: the conf key and the value it held before (None: unset)
+    key: str | None = None
+    replaced: str | None = None
 
-
-from flink_psl_spark.plans import EXPLAIN_DETAILS as _EXPLAIN_DETAILS  # noqa: E402
 
 _STMT_SET_OPEN = re.compile(
     # the EXPLAIN prefix admits both detail spellings — parenthesized
     # `(A, B)` and bare `A, B` keyword lists; the bare alternation is
     # built from plans.EXPLAIN_DETAILS so the two stay in sync
     r"^(?P<explain>EXPLAIN\s+(?:\([^)]*\)\s*"
-    r"|(?:(?:" + "|".join(sorted(_EXPLAIN_DETAILS)) + r")"
+    r"|(?:(?:" + "|".join(sorted(EXPLAIN_DETAILS)) + r")"
     r"\s*,?\s*)+)?(?:PLAN\s+FOR\s+)?)?"
     r"(?:EXECUTE\s+)?STATEMENT\s+SET\s+BEGIN\b(?P<first>.*)$",
     re.IGNORECASE | re.DOTALL,
 )
 
 
-def _group_statement_sets(stmts: list[str]) -> list[str | list[str]]:
-    """Reassemble `EXECUTE STATEMENT SET BEGIN …; …; END` blocks that the
-    ';' splitter separated (reference: the client's statement-set mode —
-    multiple INSERTs submitted as one job). A grouped entry is the list of
-    inner statements. An `EXPLAIN [(details)] [EXECUTE] STATEMENT SET …`
-    block is reassembled back into ONE statement string so the plan
-    dispatcher (plans.explain_statement) sees the whole block."""
+def entries(script: str) -> list[str | list[str]]:
+    """Split a script into its entries: one statement string each, except
+    that a `[EXECUTE] STATEMENT SET BEGIN …; …; END` block, which the ';'
+    splitter separates, comes back as ONE entry, the list of its inner
+    statements (reference: the client's statement-set mode — multiple
+    INSERTs submitted as one job). An `EXPLAIN [(details)] [EXECUTE]
+    STATEMENT SET …` block is reassembled back into ONE statement string
+    so the plan dispatcher (plans.explain_statement) sees the whole
+    block."""
+    stmts = split_statements(script)
     out: list[str | list[str]] = []
     i = 0
     while i < len(stmts):
@@ -152,71 +166,91 @@ def _group_statement_sets(stmts: list[str]) -> list[str | list[str]]:
     return out
 
 
+def _ok(spark: SparkSession, n: int = 1) -> DataFrame:
+    """The result of a statement that returns no rows of its own: one
+    `result` column of `OK` rows (the reference's TABLE_RESULT_OK)."""
+    return spark.createDataFrame([("OK",)] * n, "result string")
+
+
+def _run_sql(spark: SparkSession, stmt: str) -> DataFrame:
+    """Run one statement after the Flink SQL clause rewrites (DDL dialect,
+    temporal joins, window TVFs); a DDL may expand to several statements,
+    and the last one's frame is the result."""
+    rewritten = rewrite_flink_sql(stmt)
+    for sql in rewritten if isinstance(rewritten, list) else [rewritten]:
+        df = spark.sql(sql)
+    return df
+
+
+def _execute_entry(spark: SparkSession, entry: str | list[str]) -> StatementResult:
+    if isinstance(entry, list):
+        # statement set: the reference compiles the INSERTs into ONE job
+        # (shared sources dedup'd); Spark plans per action, so they run
+        # sequentially with identical results — the single-job fusion is
+        # an optimization the engine does not replicate
+        for inner in entry:
+            _run_sql(spark, inner)
+        return StatementResult(
+            "; ".join(entry), "statement_set", _ok(spark, max(1, len(entry)))
+        )
+    key = replaced = df = None
+    # EXPLAIN (with the reference's detail flags) / COMPILE PLAN /
+    # EXECUTE PLAN — plans.py owns the plan-statement dialect
+    handled = maybe_plan_statement(spark, entry)
+    if handled is not None:
+        kind, df = handled
+    elif m := _SET_RE.match(entry):
+        kind, key = "set", m.group("key")
+        replaced = spark.conf.get(key, None)
+        spark.conf.set(key, m.group("val"))
+    elif m := _RESET_RE.match(entry):
+        kind, key = "reset", m.group("key")
+        replaced = spark.conf.get(key, None)
+        try:
+            spark.conf.unset(key)
+        except Exception:
+            pass  # resetting a never-set key is a no-op, like the client
+    else:
+        kind, df = "query", _run_sql(spark, entry)
+    if df is None or not df.schema.fields:
+        df = _ok(spark)
+    return StatementResult(entry, kind, df, key, replaced)
+
+
+def execute(spark: SparkSession, statement: str) -> StatementResult:
+    """Classify and run ONE statement or ONE STATEMENT SET block — the
+    single statement path of the SQL client, the REST gateway and
+    TableEnvironment.
+
+    ``SET 'k' = 'v'`` / ``RESET 'k'`` hit the session conf (the reference's
+    session-option semantics; the result names the key and the value it
+    replaced); a statement set runs its INSERTs in order; EXPLAIN / COMPILE
+    PLAN / EXECUTE PLAN go to plans.py; everything else runs through
+    ``spark.sql`` after the Flink SQL clause rewrites (DDL/DML execute
+    eagerly, a query's DataFrame is lazy). A statement with no result
+    columns of its own (SET, RESET, DDL, DML) returns a `result` frame of
+    one `OK` row; a statement set returns one per inner INSERT.
+    """
+    found = entries(statement)
+    if len(found) != 1:
+        raise ValueError(
+            f"expected exactly one statement, got {len(found)}; submit "
+            "content outside a STATEMENT SET block separately"
+        )
+    return _execute_entry(spark, found[0])
+
+
 def run_script(
     spark: SparkSession, script: str, *, sf_dir: str | None = None
 ) -> list[StatementResult]:
-    """Execute a SQL script statement by statement.
-
-    ``SET 'k' = 'v'`` / ``RESET 'k'`` hit the session conf (the reference's
-    session-option semantics); everything else goes through ``spark.sql``
-    eagerly (DDL/DML execute; queries return their DataFrame lazily in the
-    result list). With ``sf_dir``, the fixture tables are registered first
-    so scripts can reference them by name.
-    """
+    """Execute a SQL script statement by statement through the
+    ``execute`` path. With ``sf_dir``, the fixture tables are registered
+    first so scripts can reference them by name."""
     if sf_dir is not None:
         from flink_psl_spark.queries.registry import tables
 
         tables(spark, sf_dir)
-    results: list[StatementResult] = []
-    for stmt in _group_statement_sets(split_statements(script)):
-        if isinstance(stmt, list):
-            # statement set: the reference compiles the INSERTs into ONE job
-            # (shared sources dedup'd); Spark plans per action, so they run
-            # sequentially with identical results — the single-job fusion is
-            # an optimization the engine does not replicate
-            from flink_psl_spark.temporal_sql import rewrite_flink_sql
-
-            for inner in stmt:
-                spark.sql(rewrite_flink_sql(inner))
-            results.append(
-                StatementResult("; ".join(stmt), "statement_set")
-            )
-            continue
-        # EXPLAIN (with the reference's detail flags) / COMPILE PLAN /
-        # EXECUTE PLAN — plans.py owns the plan-statement dialect
-        from flink_psl_spark.plans import maybe_plan_statement
-
-        handled = maybe_plan_statement(spark, stmt)
-        if handled is not None:
-            kind, df = handled
-            results.append(StatementResult(stmt, kind, df))
-            continue
-        m = _SET_RE.match(stmt)
-        if m:
-            spark.conf.set(m.group("key"), m.group("val"))
-            results.append(StatementResult(stmt, "set"))
-            continue
-        m = _RESET_RE.match(stmt)
-        if m:
-            try:
-                spark.conf.unset(m.group("key"))
-            except Exception:
-                pass  # resetting a never-set key is a no-op, like the client
-            results.append(StatementResult(stmt, "reset"))
-            continue
-        # Flink SQL clause rewrites (DDL dialect, temporal joins, window
-        # TVFs) -> standard SQL; a DDL may expand to several statements
-        from flink_psl_spark.temporal_sql import rewrite_flink_sql
-
-        rewritten = rewrite_flink_sql(stmt)
-        if isinstance(rewritten, list):
-            df = None
-            for r in rewritten:
-                df = spark.sql(r)
-            results.append(StatementResult(stmt, "query", df))
-        else:
-            results.append(StatementResult(stmt, "query", spark.sql(rewritten)))
-    return results
+    return [_execute_entry(spark, entry) for entry in entries(script)]
 
 
 def run_script_file(

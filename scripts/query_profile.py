@@ -19,7 +19,7 @@ Jobs, stages and operator metrics come from the status stores through
 ``perfbench/probes.py``, so no port is opened and profiles can run side
 by side.
 
-Usage: python scripts/profile.py <query> [sf_dir]
+Usage: python scripts/query_profile.py <query> [sf_dir]
 (sf_dir defaults to bench.py's: $SPARK_GRAFT_SF_DIR, else sf0.1)
 """
 
@@ -30,21 +30,10 @@ import os
 import sys
 import time
 
-if __name__ == "profile":
-    # Any script in this directory runs with the directory at the head of
-    # sys.path, so cProfile's ``import profile`` (pyspark imports cProfile)
-    # finds this file: put the standard library module in its place.
-    from importlib.util import module_from_spec, spec_from_file_location
-
-    _spec = spec_from_file_location(
-        "profile", os.path.join(os.path.dirname(os.__file__), "profile.py"))
-    sys.modules["profile"] = module_from_spec(_spec)
-    _spec.loader.exec_module(sys.modules["profile"])
-else:
-    _SCRIPTS = os.path.dirname(os.path.abspath(__file__))
-    _REPO = os.path.dirname(_SCRIPTS)
-    sys.path.insert(0, _REPO)
-    sys.path += [_SCRIPTS, os.path.join(_REPO, "perfbench")]
+_SCRIPTS = os.path.dirname(os.path.abspath(__file__))
+_REPO = os.path.dirname(_SCRIPTS)
+sys.path.insert(0, _REPO)
+sys.path += [_SCRIPTS, os.path.join(_REPO, "perfbench")]
 
 WARM_PASSES = 1
 

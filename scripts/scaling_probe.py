@@ -1,7 +1,7 @@
 """Parallel-scaling probe: time shuffle/compute-heavy queries at a real SF.
 
 Runs the selected batch queries to the noop sink (min of N passes after a
-warm pass, each pass profiled by scripts/profile.py) on
+warm pass, each pass profiled by scripts/query_profile.py) on
 ``local[$SPARK_GRAFT_CPUS]`` against ``$SPARK_GRAFT_SF_DIR`` (generate the
 corpus with scripts/gen_scale_data.py) and prints one JSON line, with the
 profile record of each query's fastest pass under ``profiles``. Run it
@@ -18,11 +18,8 @@ from __future__ import annotations
 
 import json
 import os
-import runpy
 import sys
 import time
-
-_SCRIPTS = os.path.dirname(os.path.abspath(__file__))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata_sf1")
 PASSES = int(os.environ.get("SCALING_PASSES", "3"))
@@ -48,9 +45,8 @@ PROBE_QUERIES = [
 
 
 def main() -> int:
-    # loaded by path (the module name ``profile`` is the standard library's);
-    # loading it also puts the repo, scripts/ and perfbench/ on sys.path
-    profile = runpy.run_path(os.path.join(_SCRIPTS, "profile.py"))["profile"]
+    # importing it also puts the repo, scripts/ and perfbench/ on sys.path
+    from query_profile import profile
 
     from probes import RETAIN_ALL
     from pyspark.sql import functions as F

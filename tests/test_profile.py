@@ -1,20 +1,20 @@
-"""The UI-off query profiler (scripts/profile.py) on the shared session."""
+"""The UI-off query profiler (scripts/query_profile.py) on the shared session."""
 
 from __future__ import annotations
 
 import os
-import runpy
+import sys
 
 import pytest
 
-_SCRIPT = os.path.join(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__))), "scripts", "profile.py")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "scripts"))
+
+from query_profile import profile  # noqa: E402
 
 
 @pytest.fixture(scope="module")
 def record(spark, sf_dir):
-    # loaded by path: the module name ``profile`` is the standard library's
-    profile = runpy.run_path(_SCRIPT)["profile"]
     return profile(spark, "q1_pricing_summary", sf_dir)
 
 
