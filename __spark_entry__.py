@@ -24,6 +24,10 @@ def _configure(spark: SparkSession) -> None:
     (single source of truth — round-4 postmortem: a conf present only in
     the builder path broke the datagen DSv2 source under the driver's
     own session).
+
+    Static confs cannot be set here, so a driver-provided session keeps
+    Spark's default generated-class cache (100 entries, sized by whichever
+    thread compiled first); ``get_spark`` sets and builds a larger one.
     """
     from flink_psl_spark.session import RUNTIME_SQL_CONF
 

@@ -108,6 +108,15 @@ def get_spark(
         ),
         "spark.ui.enabled": "false",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        # Generated-class cache (Janino output, LRU). Spark's default of 100
+        # is below one pass of a working set: relational perfbench uses 129
+        # distinct classes, curation 171, the 34 bench.py headlines 395 at
+        # sf0.01, and all three in one session 706. At 100 every class was
+        # evicted before reuse, so each warm pass recompiled 48-180 classes
+        # and the JIT compiled them again. A static conf: Spark rejects a
+        # runtime set of it, so it cannot live in RUNTIME_SQL_CONF (where
+        # ``_configure`` would swallow that error and leave 100).
+        "spark.sql.codegen.cache.maxEntries": "1000",
     }
     if extra_conf:
         conf.update(extra_conf)
@@ -116,4 +125,11 @@ def get_spark(
 
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # The cache is built once per JVM, in CodeGenerator's object
+    # initializer, from SQLConf.get on the first thread that touches it. A
+    # thread without an active session (a pool thread in a `df.rdd` probe)
+    # reads SQLConf's fallback defaults there, 100 entries whatever the
+    # conf says. Touch it here, where this session is active.
+    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen
+    codegen.CodeGenerator.isValidParamLength(0)
     return spark

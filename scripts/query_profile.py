@@ -13,6 +13,9 @@ group, and prints one JSON record of the profiled pass:
 - ``stages``: one row per completed stage;
 - ``op.*`` / ``python.*``: SQL operator metrics of the pass;
 - ``storage.*``: cached and checkpointed blocks the session holds after it;
+- ``codegen.classes_compiled``: generated classes Janino compiled during
+  the pass (0 when every class came from Spark's codegen cache);
+  ``jvm.jit_s``: the JVM's JIT compiler time during the pass;
 - ``plan``: ``scripts/plan_audit.py``'s bucket, flags and counters.
 
 Jobs, stages and operator metrics come from the status stores through
@@ -60,6 +63,16 @@ def stage_rows(status, jobs: list[dict]) -> list[dict]:
     } for sid, st in sorted(last.items())]
 
 
+def compile_counters(spark) -> tuple[int, float]:
+    """(generated classes compiled, JIT compiler seconds) so far in the
+    driver JVM, which in local mode runs the tasks too."""
+    jvm = spark._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    return (metrics.METRIC_COMPILATION_TIME().getCount(),
+            jit.getTotalCompilationTime() / 1000.0)
+
+
 def profile(spark, name: str, sf_dir: str, *, warm: bool = True) -> dict:
     """One profiled pass of ``QUERIES[name]`` to the noop sink, after
     ``WARM_PASSES`` untimed ones (none with ``warm=False``, for a caller
@@ -79,6 +92,7 @@ def profile(spark, name: str, sf_dir: str, *, warm: bool = True) -> dict:
     rid = f"profile:{name}#{time.time():.6f}"
     stream_core.STREAM_PLANS.clear()
     marker = status.executions_marker()
+    classes0, jit0 = compile_counters(spark)
     try:
         sc.setJobGroup(f"build:{rid}", rid)
         t0 = time.perf_counter()
@@ -91,6 +105,7 @@ def profile(spark, name: str, sf_dir: str, *, warm: bool = True) -> dict:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     sql_range = (marker, status.executions_marker())
+    classes1, jit1 = compile_counters(spark)
 
     jobs = status.jobs([f"build:{rid}", f"exec:{rid}"])
     spark_layers = summarize_groups([status.spark_stats(jobs)], wall_s)
@@ -109,6 +124,8 @@ def profile(spark, name: str, sf_dir: str, *, warm: bool = True) -> dict:
         **status.operator_stats([sql_range]),
         "storage.rdds_retained": rdds,
         "storage.bytes_retained": stored,
+        "codegen.classes_compiled": classes1 - classes0,
+        "jvm.jit_s": jit1 - jit0,
         "plan": {"bucket": bucket, "flags": flags, **counters},
         "stages": stage_rows(status, jobs),
     }

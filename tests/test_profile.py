@@ -39,3 +39,9 @@ def test_profile_reports_plan_counters(record):
     for key in ("exchanges", "file_scans", "python_maps", "single_partition"):
         assert key in plan
     assert plan["file_scans"] >= 1
+
+
+def test_profile_reports_compilation(record):
+    """The warm pass leaves every generated class in the codegen cache."""
+    assert record["codegen.classes_compiled"] == 0
+    assert record["jvm.jit_s"] >= 0
