@@ -267,17 +267,13 @@ def upsert_into_partitioned_parquet(
         out = merge_upsert(current, bucketed, key_list, version_by)
         out.persist()
         out.count()  # materialize before overwriting the partitions it read
-        prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
-        finally:
-            if prev_mode is not None:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev_mode
-                )
-            else:
-                spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+        # dynamic overwrite as a writer option: it governs this write only
+        (
+            out.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(BUCKET_COL)
+            .parquet(path)
+        )
         out.unpersist()
         bucketed.unpersist()
 

@@ -12,9 +12,11 @@ Spark-first design: the gateway is a thin REST shell over
 ``sql_client.execute``, the one statement path it shares with the SQL client
 and TableEnvironment — Catalyst does all planning/execution; this module
 supplies only the service semantics the reference adds on top of its
-engine: session lifecycle with per-session config scoping (SET/RESET
-restored on close), operation handles with a status lifecycle (PENDING →
-RUNNING → FINISHED/ERROR/CANCELED), token-paginated result fetch with
+engine: session lifecycle, each session running on its own clone of the
+base SparkSession (its own SQL conf and temp views, which SET/RESET and
+temporary DDL change; closing the session drops the clone), operation
+handles with a status lifecycle (PENDING → RUNNING →
+FINISHED/ERROR/CANCELED), token-paginated result fetch with
 ``nextResultUri``, and JSON row encoding.
 Runs in-process on ``http.server`` (stdlib only) — a user of the reference's
 ``sql-gateway -Dsql-gateway.endpoint.rest.port=…`` can point the same REST
@@ -93,20 +95,23 @@ class Operation:
 
 @dataclass
 class Session:
-    """Reference: SessionHandle + session config (SessionManagerImpl)."""
+    """Reference: SessionHandle + the session's own configuration and
+    catalog state (SessionManagerImpl)."""
 
     handle: str
-    properties: dict[str, str] = field(default_factory=dict)
-    overridden: dict[str, str | None] = field(default_factory=dict)
+    spark: SparkSession
     operations: dict[str, Operation] = field(default_factory=dict)
 
 
 class SqlGatewayService:
-    """Session/operation bookkeeping over one SparkSession.
+    """Session/operation bookkeeping over one base SparkSession.
 
     Mirrors SqlGatewayService.java's surface (openSession, closeSession,
     executeStatement, fetchResults, getOperationInfo, cancelOperation) minus
-    the cluster-deployment pieces Spark doesn't need.
+    the cluster-deployment pieces Spark doesn't need. Each session runs on a
+    clone of the base session: it starts with the base's conf, temp views
+    and UDFs, and what it changes stays its own. The SparkContext (jobs,
+    job groups, cache) is shared.
     """
 
     def __init__(self, spark: SparkSession):
@@ -117,46 +122,31 @@ class SqlGatewayService:
     # -- sessions ----------------------------------------------------------
     def open_session(self, properties: dict[str, str] | None = None) -> str:
         handle = str(uuid.uuid4())
-        sess = Session(handle, dict(properties or {}))
+        # the opening properties are set on the clone as it is wrapped
+        spark = SparkSession(
+            self.spark.sparkContext,
+            self.spark._jsparkSession.cloneSession(),
+            dict(properties or {}),
+        )
         with self._lock:
-            self.sessions[handle] = sess
-        for k, v in list(sess.properties.items()):
-            replaced = self.spark.conf.get(k, None)
-            self.spark.conf.set(k, v)
-            self._track(sess, k, replaced, v)
+            self.sessions[handle] = Session(handle, spark)
         return handle
 
     def close_session(self, handle: str) -> None:
-        sess = self._session(handle)
-        # restore conf the session overrode (session-scoped SET semantics)
-        for k, prev in sess.overridden.items():
-            if prev is None:
-                try:
-                    self.spark.conf.unset(k)
-                except Exception:
-                    pass
-            else:
-                self.spark.conf.set(k, prev)
+        # dropping the clone discards its conf and temp views; never stop()
+        # it, which would stop the shared SparkContext
+        self._session(handle)
         with self._lock:
             del self.sessions[handle]
 
     def get_session_config(self, handle: str) -> dict[str, str]:
-        return dict(self._session(handle).properties)
+        return dict(self._session(handle).spark.conf.getAll)
 
     def _session(self, handle: str) -> Session:
         try:
             return self.sessions[handle]
         except KeyError:
             raise KeyError(f"Session '{handle}' does not exist") from None
-
-    @staticmethod
-    def _track(sess: Session, key: str, replaced: str | None, val: str | None) -> None:
-        """Record a session-scoped conf change: the first value it replaced
-        is what close_session restores."""
-        sess.overridden.setdefault(key, replaced)
-        sess.properties.pop(key, None)
-        if val is not None:
-            sess.properties[key] = val
 
     # -- statements --------------------------------------------------------
     def execute_statement(self, session_handle: str, statement: str) -> str:
@@ -177,12 +167,7 @@ class SqlGatewayService:
                 self.spark.sparkContext.setJobGroup(
                     op.handle, statement[:200], interruptOnCancel=True
                 )
-                res = execute(self.spark, statement)
-                if res.kind == "set":
-                    val = self.spark.conf.get(res.key)
-                    self._track(sess, res.key, res.replaced, val)
-                elif res.kind == "reset":
-                    self._track(sess, res.key, res.replaced, None)
+                res = execute(sess.spark, statement)
                 op.is_query = res.kind == "query"
                 op.columns = [
                     {

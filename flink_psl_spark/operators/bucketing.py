@@ -17,6 +17,8 @@ of the big table fits an executor core's working set (128–512 MB parquet).
 
 from __future__ import annotations
 
+from itertools import takewhile
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -87,10 +89,12 @@ def cobucketed_join(
 
     Validates that both tables are bucketed on ``on`` with the same bucket
     count (the precondition for Spark to elide both exchanges), then emits
-    the plain declarative join — Catalyst does the actual exchange removal.
-    Raises ValueError when the layouts don't line up, because silently
-    falling back to a full shuffle is exactly the 100 TB surprise this
-    helper exists to prevent.
+    the declarative join with a ``merge`` hint — Catalyst does the actual
+    exchange removal. The hint keeps the join a sort-merge join over the
+    buckets whatever the session's broadcast threshold, so a small side
+    cannot turn it into a broadcast. Raises ValueError when the layouts
+    don't line up, because silently falling back to a full shuffle is
+    exactly the 100 TB surprise this helper exists to prevent.
     """
     li, ri = bucket_info(spark, left_table), bucket_info(spark, right_table)
     for name, info in ((left_table, li), (right_table, ri)):
@@ -106,7 +110,22 @@ def cobucketed_join(
             f"bucket counts differ: {left_table}={li['num_buckets']}, "
             f"{right_table}={ri['num_buckets']}"
         )
-    return spark.table(left_table).join(spark.table(right_table), on=on, how=how)
+    return spark.table(left_table).join(
+        spark.table(right_table).hint("merge"), on=on, how=how
+    )
+
+
+def join_is_exchange_free(df: DataFrame) -> bool:
+    """Whether ``df`` runs a sort-merge join with no Exchange below it —
+    the executed plan of a co-bucketed join. An Exchange above the join
+    (a later rollup on other keys) does not count."""
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    depth = [len(line) - len(line.lstrip(" :+-")) for line in lines]
+    for i, line in enumerate(lines):
+        if "SortMergeJoin" in line:
+            below = takewhile(lambda j: depth[j] > depth[i], range(i + 1, len(lines)))
+            return not any("Exchange" in lines[j] for j in below)
+    return False
 
 
 def zorder_key(

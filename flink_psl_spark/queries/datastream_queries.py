@@ -407,37 +407,32 @@ def bucketed_join_agg(spark, sf_dir):
     bucketBy): both sides are written bucketed on the join key, the join +
     per-key aggregate then run with ZERO exchanges (asserted on the plan —
     the 100 TB path for repeatedly-joined fact tables)."""
-    from flink_psl_spark.operators.bucketing import cobucketed_join, write_bucketed
+    from flink_psl_spark.operators.bucketing import (
+        cobucketed_join,
+        join_is_exchange_free,
+        write_bucketed,
+    )
 
     t = tables(spark, sf_dir)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        write_bucketed(
-            t["orders"].select(
-                F.col("o_custkey").alias("custkey"), "o_totalprice"
-            ),
-            "q_b_orders", bucket_cols=["custkey"], num_buckets=8,
-            sort_cols=["custkey"],
-        )
-        write_bucketed(
-            t["customer"].select(
-                F.col("c_custkey").alias("custkey"), "c_mktsegment"
-            ),
-            "q_b_customer", bucket_cols=["custkey"], num_buckets=8,
-            sort_cols=["custkey"],
-        )
-        joined = cobucketed_join(spark, "q_b_orders", "q_b_customer", on=["custkey"])
-        # the join itself is exchange-free (both sides co-bucketed); the
-        # final segment rollup then shuffles 5 aggregate rows, nothing more
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, "bucketed join must be shuffle-free"
-        return joined.groupBy("c_mktsegment").agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    write_bucketed(
+        t["orders"].select(F.col("o_custkey").alias("custkey"), "o_totalprice"),
+        "q_b_orders", bucket_cols=["custkey"], num_buckets=8,
+        sort_cols=["custkey"],
+    )
+    write_bucketed(
+        t["customer"].select(F.col("c_custkey").alias("custkey"), "c_mktsegment"),
+        "q_b_customer", bucket_cols=["custkey"], num_buckets=8,
+        sort_cols=["custkey"],
+    )
+    joined = cobucketed_join(spark, "q_b_orders", "q_b_customer", on=["custkey"])
+    out = joined.groupBy("c_mktsegment").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.round(F.sum("o_totalprice"), 2).alias("revenue"),
+    )
+    # the plan that runs: the join itself is exchange-free (both sides
+    # co-bucketed); the segment rollup above it shuffles 5 aggregate rows
+    assert join_is_exchange_free(out), "bucketed join must be shuffle-free"
+    return out
 
 
 @query(

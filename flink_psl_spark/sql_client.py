@@ -101,9 +101,6 @@ class StatementResult:
     # query | set | reset | statement_set | explain | compile_plan | execute_plan
     kind: str
     df: DataFrame
-    # SET / RESET: the conf key and the value it held before (None: unset)
-    key: str | None = None
-    replaced: str | None = None
 
 
 _STMT_SET_OPEN = re.compile(
@@ -193,28 +190,26 @@ def _execute_entry(spark: SparkSession, entry: str | list[str]) -> StatementResu
         return StatementResult(
             "; ".join(entry), "statement_set", _ok(spark, max(1, len(entry)))
         )
-    key = replaced = df = None
+    df = None
     # EXPLAIN (with the reference's detail flags) / COMPILE PLAN /
     # EXECUTE PLAN — plans.py owns the plan-statement dialect
     handled = maybe_plan_statement(spark, entry)
     if handled is not None:
         kind, df = handled
     elif m := _SET_RE.match(entry):
-        kind, key = "set", m.group("key")
-        replaced = spark.conf.get(key, None)
-        spark.conf.set(key, m.group("val"))
+        kind = "set"
+        spark.conf.set(m.group("key"), m.group("val"))
     elif m := _RESET_RE.match(entry):
-        kind, key = "reset", m.group("key")
-        replaced = spark.conf.get(key, None)
+        kind = "reset"
         try:
-            spark.conf.unset(key)
+            spark.conf.unset(m.group("key"))
         except Exception:
             pass  # resetting a never-set key is a no-op, like the client
     else:
         kind, df = "query", _run_sql(spark, entry)
     if df is None or not df.schema.fields:
         df = _ok(spark)
-    return StatementResult(entry, kind, df, key, replaced)
+    return StatementResult(entry, kind, df)
 
 
 def execute(spark: SparkSession, statement: str) -> StatementResult:
@@ -222,14 +217,14 @@ def execute(spark: SparkSession, statement: str) -> StatementResult:
     single statement path of the SQL client, the REST gateway and
     TableEnvironment.
 
-    ``SET 'k' = 'v'`` / ``RESET 'k'`` hit the session conf (the reference's
-    session-option semantics; the result names the key and the value it
-    replaced); a statement set runs its INSERTs in order; EXPLAIN / COMPILE
-    PLAN / EXECUTE PLAN go to plans.py; everything else runs through
-    ``spark.sql`` after the Flink SQL clause rewrites (DDL/DML execute
-    eagerly, a query's DataFrame is lazy). A statement with no result
-    columns of its own (SET, RESET, DDL, DML) returns a `result` frame of
-    one `OK` row; a statement set returns one per inner INSERT.
+    ``SET 'k' = 'v'`` / ``RESET 'k'`` hit the conf of ``spark`` (the
+    reference's session-option semantics); a statement set runs its
+    INSERTs in order; EXPLAIN / COMPILE PLAN / EXECUTE PLAN go to
+    plans.py; everything else runs through ``spark.sql`` after the Flink
+    SQL clause rewrites (DDL/DML execute eagerly, a query's DataFrame is
+    lazy). A statement with no result columns of its own (SET, RESET, DDL,
+    DML) returns a `result` frame of one `OK` row; a statement set returns
+    one per inner INSERT.
     """
     found = entries(statement)
     if len(found) != 1:

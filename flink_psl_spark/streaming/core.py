@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -61,6 +62,9 @@ def stream_from_parquet(
 STREAM_PLANS: list[str] = []
 _STREAM_PLANS_MAX = 256
 
+# held while run_to_memory_table's pins are on the caller's session
+_START_LOCK = threading.Lock()
+
 
 def _capture_stream_plan(q) -> None:
     """Record the last micro-batch's executed plan (best-effort: a stream
@@ -92,9 +96,14 @@ def run_to_memory_table(
     State store: a bounded replay's state is small by construction, so the
     heap (HDFSBacked) provider is used for the run — measured ~2× faster
     than RocksDB at this state size. Long-running jobs whose state outgrows
-    executor heap keep the session default (RocksDB, session.py); the
-    provider is pinned per-query at start, so restoring the conf afterwards
-    doesn't affect this run.
+    executor heap keep the session default (RocksDB, session.py).
+
+    The provider, and the partition count and no-data-batch flag below,
+    are pinned for the query only. Spark copies the session conf into a
+    streaming query when ``start()`` builds it, so they are set on the
+    caller's session just around ``start()`` (under a module lock) and put
+    back before the replay runs. The caller's session keeps reading its
+    own values while the replay runs.
 
     State partitioning: stateful streaming pays a per-partition, per-batch
     state commit; unlike batch (AQE) nothing resizes streaming shuffles to
@@ -122,51 +131,43 @@ def run_to_memory_table(
     spark = stream_df.sparkSession
     name = f"mem_{uuid.uuid4().hex[:12]}"
     ckpt = os.path.join(tempfile.mkdtemp(prefix="fps_ckpt_"), name)
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_prov = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "HDFSBackedStateStoreProvider",
-    )
-    part_key = "spark.sql.shuffle.partitions"
-    prev_parts = spark.conf.get(part_key, None)
-    spark.conf.set(part_key, str(shuffle_partitions or 8))
-    nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev_nodata = spark.conf.get(nodata_key, None)
+    pinned = {
+        "spark.sql.streaming.stateStore.providerClass": (
+            "org.apache.spark.sql.execution.streaming.state."
+            "HDFSBackedStateStoreProvider"
+        ),
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or 8),
+    }
     if not final_nodata_batch:
-        spark.conf.set(nodata_key, "false")
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
+        pinned["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    # the lock keeps overlapping starts from reading each other's pins as
+    # the caller's own values
+    with _START_LOCK:
+        prev = {key: spark.conf.get(key, None) for key in pinned}
+        for key, value in pinned.items():
+            spark.conf.set(key, value)
         try:
-            if not q.awaitTermination(timeout_sec):
-                raise TimeoutError(
-                    f"streaming query {name} exceeded {timeout_sec}s"
-                )
+            q = (
+                stream_df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
         finally:
-            _capture_stream_plan(q)
-            if q.isActive:
-                q.stop()
+            for key, value in prev.items():
+                if value is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, value)
+    try:
+        if not q.awaitTermination(timeout_sec):
+            raise TimeoutError(f"streaming query {name} exceeded {timeout_sec}s")
     finally:
-        # a previous value of None means the key was never set on this
-        # session — unset it, or the pinned provider/partition-count leaks
-        # into every later query on the session
-        for key, prev in (
-            (prov_key, prev_prov),
-            (part_key, prev_parts),
-            (nodata_key, prev_nodata),
-        ):
-            if prev is not None:
-                spark.conf.set(key, prev)
-            else:
-                spark.conf.unset(key)
+        _capture_stream_plan(q)
+        if q.isActive:
+            q.stop()
     return spark.table(name)
 
 

@@ -69,14 +69,17 @@ def test_pagination_follows_next_result_uri(client):
     client.close_session(h)
 
 
-def test_set_reset_scoped_to_session(client, spark):
-    before = spark.conf.get("spark.sql.shuffle.partitions")
+def test_set_reset_scoped_to_session(gateway, client, spark):
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
     h = client.open_session()
-    op = client.execute(h, "SET 'spark.sql.shuffle.partitions' = '7'")
+    op = client.execute(h, f"SET '{key}' = '7'")
     assert client.status(h, op) == FINISHED
-    assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
-    client.close_session(h)  # close restores the overridden conf
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    # the SET lands on the session's own conf, never on the base session
+    assert gateway.service.sessions[h].spark.conf.get(key) == "7"
+    assert spark.conf.get(key) == before
+    client.close_session(h)
+    assert spark.conf.get(key) == before
 
 
 def test_error_statement_reports_error_status(client):
@@ -232,3 +235,52 @@ def test_statement_set_through_gateway(client, spark, tmp_path):
     client.close_session(h)
     spark.sql("DROP TABLE gw_ss_a")
     spark.sql("DROP TABLE gw_ss_b")
+
+
+def _value(client, h, key):
+    """The value of ``key`` as the session's own statements see it."""
+    op = client.execute(h, f"SET {key}")
+    assert client.status(h, op) == FINISHED
+    return dict(client.fetch_all(h, op)[1])[key]
+
+
+@pytest.mark.parametrize("close_first", ["a", "b"])
+def test_two_sessions_are_isolated(client, spark, close_first):
+    """Each session runs on its own clone of the base session: temp views
+    and SETs stay in the session that made them, and closing sessions in
+    either order leaves the base conf as it was (reference: every gateway
+    session owns its configuration and catalog state)."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    a, b = client.open_session(), client.open_session()
+    op = client.execute(a, "CREATE TEMPORARY VIEW only_a AS SELECT 1 AS x")
+    assert client.status(a, op) == FINISHED
+    assert client.fetch_all(a, client.execute(a, "SELECT x FROM only_a"))[1] == [[1]]
+    assert client.status(b, client.execute(b, "SELECT x FROM only_a")) == "ERROR"
+    assert not spark.catalog.tableExists("only_a")
+
+    for h, value in ((a, "3"), (b, "5")):
+        op = client.execute(h, f"SET '{key}' = '{value}'")
+        assert client.status(h, op) == FINISHED
+    assert (_value(client, a, key), _value(client, b, key)) == ("3", "5")
+    assert spark.conf.get(key) == before
+
+    first, second = (a, b) if close_first == "a" else (b, a)
+    client.close_session(first)
+    assert spark.conf.get(key) == before
+    assert _value(client, second, key) == ("3" if second == a else "5")
+    client.close_session(second)
+    assert spark.conf.get(key) == before
+
+
+def test_session_sees_base_udfs_and_views(client, spark):
+    """What the base session registered before a session opened (fixture
+    views, UDFs) is usable in that session."""
+    spark.udf.register("gw_base_plus1", lambda x: x + 1, "long")
+    spark.range(3).createOrReplaceTempView("gw_base_view")
+    h = client.open_session()
+    op = client.execute(
+        h, "SELECT gw_base_plus1(id) AS y FROM gw_base_view ORDER BY y"
+    )
+    assert client.fetch_all(h, op) == (["y"], [[1], [2], [3]])
+    client.close_session(h)

@@ -115,8 +115,9 @@ def _via_gateway(spark, gateway, text):
         if client.status(h, op) != FINISHED:
             raise RuntimeError(gateway.service.sessions[h].operations[op].error)
         _, rows = client.fetch_all(h, op)
-        # read before close: closing the session restores the conf
-        return _normal(rows), spark.conf.get(KEY, None)
+        # the session's own conf, read before close drops it
+        session = gateway.service.sessions[h].spark
+        return _normal(rows), session.conf.get(KEY, None)
     finally:
         client.close_session(h)
 
