@@ -342,6 +342,11 @@ def stream_space_saving(
     the refreshed roster as ``(shard, rank, item, cnt, err)`` whenever
     it changes (update mode; roster size never shrinks, so keep the
     last emission per (shard, rank)).
+
+    The roster depends on how the input splits into micro-batches: each
+    batch's counts merge as one step, so an eviction sees the counters
+    as of the batch boundary. Only the superset guarantee above holds
+    for every split.
     """
     from typing import Any, Iterator
 

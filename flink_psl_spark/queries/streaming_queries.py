@@ -541,9 +541,10 @@ def stream_anti_join(spark, sf_dir):
 )
 def stream_running_agg(spark, sf_dir):
     """Streaming group aggregation as an update stream via
-    transformWithStateInPandas + TTL'd ValueState (reference
-    StreamExecGroupAggregate + table.exec.state.ttl). Latest update per key
-    after bounded replay equals the batch aggregate."""
+    keyed_running_agg's GroupState fold with expire-on-read TTL (reference
+    StreamExecGroupAggregate + table.exec.state.ttl). The 1-hour TTL never
+    expires during a replay, so the latest update per key equals the
+    batch aggregate."""
     from flink_psl_spark.operators import deduplicate
     from flink_psl_spark.streaming import keyed_running_agg
 

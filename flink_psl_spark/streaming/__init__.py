@@ -5,9 +5,10 @@ stream-stream interval joins, stateful keyed operators.
 
 The reference's streaming machinery maps as follows (SURVEY §2.9):
 watermark strategies → ``withWatermark``; window assigners → ``window()`` /
-``session_window()``; keyed state + timers → ``applyInPandasWithState`` /
-``transformWithStateInPandas``; checkpointing → ``checkpointLocation`` with
-the RocksDB state-store provider (the fork's pluggable-state-backend intent,
+``session_window()``; keyed state + timers → ``applyInPandasWithState``
+(GroupState, one event-time timer per key; state TTL is expire-on-read
+against the batch's processing time, see ``keyed_running_agg``);
+checkpointing → ``checkpointLocation`` with the RocksDB state-store provider (the fork's pluggable-state-backend intent,
 SURVEY §0, is Spark's ``spark.sql.streaming.stateStore.providerClass``).
 """
 

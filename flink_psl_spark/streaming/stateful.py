@@ -109,94 +109,55 @@ def keyed_running_agg(
     .java:81, GroupAggFunction.java) with idle-state retention
     (``table.exec.state.ttl`` ≈ ``ttl_ms``, StateTtlConfig).
 
-    Built on ``transformWithStateInPandas`` (Spark 4 stateful processor API)
-    with a TTL'd ValueState — the engine-level counterpart of the PSL
-    fork's pluggable keyed state (SURVEY §0): the state lives in the
-    configured state-store provider (RocksDB here) and expires per key
-    after ``ttl_ms`` of no updates.
+    ``cnt`` is COUNT(*); ``total``, ``min_v`` and ``max_v`` fold only the
+    non-NULL values, as SQL's SUM/MIN/MAX do (NULL while a key has seen
+    none), so no NaN ever reaches state.
 
-    The transformWithState protocol needs the ``protobuf`` package; where
-    it is absent the operator falls back to an equivalent
-    ``applyInPandasWithState`` implementation (GroupState has no per-state
-    TTL — ``ttl_ms`` is then ignored; production TTL uses the primary path
-    or a GroupStateTimeout sweep).
+    TTL is expire-on-read: the state keeps the processing time of the
+    key's last update, and when ``ttl_ms`` is set and a batch finds
+    ``getCurrentProcessingTimeMs() - last_ms >= ttl_ms``, the key's
+    previous values are treated as absent before the batch is folded in
+    (Flink's default ``NeverReturnExpired`` visibility, measured in
+    processing time as StateTtlConfig measures it). No timeout is
+    registered, so an idle key's state is not cleaned up; it is only
+    never read again.
     """
     src = events.select(key_col, value_col)
-    k_dt = _dt(src, key_col)
     out_schema = (
-        f"{key_col} {k_dt}, cnt bigint, total double, min_v double, max_v double"
+        f"{key_col} {_dt(src, key_col)}, cnt bigint, total double, "
+        "min_v double, max_v double"
     )
 
-    try:
-        import google.protobuf  # noqa: F401  (transformWithState transport)
-
-        _tws_available = True
-    except ImportError:
-        _tws_available = False
-
-    if not _tws_available:
-        state_fields = "cnt bigint, total double, min_v double, max_v double"
-
-        def fn(key, batches: Iterator[pd.DataFrame], state: GroupState):
-            cnt, total, mn, mx = state.get if state.exists else (0, 0.0, None, None)
-            for pdf in batches:
-                v = pdf[value_col]
-                if len(v):
-                    cnt += len(v)
-                    total += float(v.sum())
-                    mn = float(v.min()) if mn is None else min(mn, float(v.min()))
-                    mx = float(v.max()) if mx is None else max(mx, float(v.max()))
-            state.update((cnt, total, mn, mx))
-            yield pd.DataFrame(
-                {key_col: [key[0]], "cnt": [cnt], "total": [total],
-                 "min_v": [mn], "max_v": [mx]}
-            )
-
-        return src.groupBy(key_col).applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_fields,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+    def fn(key, batches: Iterator[pd.DataFrame], state: GroupState):
+        now = state.getCurrentProcessingTimeMs()
+        cnt, total, mn, mx = 0, None, None, None
+        if state.exists:
+            *agg, last_ms = state.get
+            if ttl_ms is None or now - last_ms < ttl_ms:
+                cnt, total, mn, mx = agg
+        for pdf in batches:
+            cnt += len(pdf)
+            v = pdf[value_col].dropna()
+            if len(v):
+                add, lo, hi = float(v.sum()), float(v.min()), float(v.max())
+                total = add if total is None else total + add
+                mn = lo if mn is None else min(mn, lo)
+                mx = hi if mx is None else max(mx, hi)
+        state.update((cnt, total, mn, mx, now))
+        yield pd.DataFrame(
+            {key_col: [key[0]], "cnt": [cnt], "total": [total],
+             "min_v": [mn], "max_v": [mx]}
         )
 
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningAgg(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState(
-                "agg", "cnt bigint, total double, min_v double, max_v double",
-                ttlDurationMs=ttl_ms,
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._st.exists():
-                cnt, total, mn, mx = self._st.get()
-            else:
-                cnt, total, mn, mx = 0, 0.0, None, None
-            for pdf in rows:
-                v = pdf[value_col]
-                cnt += len(v)
-                total += float(v.sum())
-                mn = float(v.min()) if mn is None else min(mn, float(v.min()))
-                mx = float(v.max()) if mx is None else max(mx, float(v.max()))
-            self._st.update((cnt, total, mn, mx))
-            yield pd.DataFrame(
-                {key_col: [key[0]], "cnt": [cnt], "total": [total],
-                 "min_v": [mn], "max_v": [mx]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return src.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=RunningAgg(),
+    return src.groupBy(key_col).applyInPandasWithState(
+        fn,
         outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
+        stateStructType=(
+            "cnt bigint, total double, min_v double, max_v double, "
+            "last_ms bigint"
+        ),
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -223,6 +184,11 @@ def connect_keyed(
     with control rows first at equal timestamps — the reference's
     recommended control-priority convention. ``state_dict`` is an arbitrary
     JSON-serializable dict (≈ ValueState).
+
+    The output depends on how the input splits into micro-batches:
+    ``process`` orders rows within one batch only, so a control row that
+    arrives a batch after an earlier-timestamped data row does not gate
+    it.
     """
     import json as _json
 
@@ -581,6 +547,8 @@ def with_current_watermark(
     is global per query, as in Spark's model; Flink's is per-operator).
     Typical uses carried over from the reference: routing late-but-accepted
     rows, debugging watermark lag, gating emission in custom operators.
+    The annotation is the watermark of the micro-batch a row arrives in,
+    so it depends on how the input splits into batches.
     """
     cols = list(events.columns)
     out_fields = ", ".join(f"{c} {t}" for c, t in events.dtypes)
@@ -639,56 +607,6 @@ def _timer_ms(due_us: int, wm_us: int | None = None) -> int:
     return early if wm_us is None else max(early, wm_us // 1000 + 1)
 
 
-def _gap_sessions(
-    buf: list[tuple[int, float]], gap_us: int
-) -> list[tuple[int, int, int, float]]:
-    """(ts_us, v) buffer → [(start_us, last_us, n, total)], gap-split
-    (break at inactivity >= gap, matching session_window merging)."""
-    out: list[tuple[int, int, int, float]] = []
-    for t, v in sorted(buf):
-        if out and t - out[-1][1] < gap_us:
-            s, last, n, tot = out[-1]
-            out[-1] = (s, t, n + 1, tot + v)
-        else:
-            out.append((t, t, 1, v))
-    return out
-
-
-def _finalize_sessions(buf: list[tuple[int, float]], gap_us: int, wm_us: int):
-    """Split the buffer's sessions into those the watermark finalized
-    ("onTimer": wm passed last + gap) and the rows of the pending ones."""
-    done, keep = [], []
-    for s, last, n, tot in _gap_sessions(buf, gap_us):
-        if last + gap_us <= wm_us:
-            done.append((s, last, n, tot))
-        else:
-            keep.extend((t, v) for t, v in buf if s <= t <= last)
-    return done, keep
-
-
-def _session_frame(key_col: str, key, done, gap_us: int) -> pd.DataFrame:
-    """(key, session_start, session_end, n, total) rows of the finalized
-    sessions — session_end = last + gap, exactly session_window's bound."""
-    return pd.DataFrame(
-        {
-            key_col: [key[0]] * len(done),
-            "session_start": pd.to_datetime([d[0] for d in done], unit="us"),
-            "session_end": pd.to_datetime(
-                [d[1] + gap_us for d in done], unit="us"
-            ),
-            "n": [d[2] for d in done],
-            "total": [d[3] for d in done],
-        }
-    )
-
-
-def _session_schema(src: DataFrame, key_col: str) -> str:
-    return (
-        f"{key_col} {_dt(src, key_col)}, session_start timestamp, "
-        "session_end timestamp, n bigint, total double"
-    )
-
-
 def timer_session_agg(
     events: DataFrame,
     key_col: str,
@@ -706,12 +624,7 @@ def timer_session_agg(
     EventTimeSessionWindows + EventTimeTrigger). The Spark counterpart of
     registerEventTimeTimer/onTimer is ``setTimeoutTimestamp`` +
     ``hasTimedOut`` under ``GroupStateTimeout.EventTimeTimeout`` — one
-    event-time timer per key, fired by watermark passage. (Spark 4's
-    ``transformWithStateInPandas`` timeMode='EventTime' +
-    handleExpiredTimer is the N-timers generalization — implemented as
-    :func:`timer_session_agg_tws`, protobuf-transport-gated and
-    parity-tested; this GroupState form runs everywhere and is
-    semantically identical for the one-timer-per-key pattern.)
+    event-time timer per key, fired by watermark passage.
 
     Distinct from the native ``session_window`` agg (stream_session_agg):
     this is the TIMER machinery itself — out-of-order rows buffer in
@@ -734,132 +647,53 @@ def timer_session_agg(
 
     def fn(key, batches: Iterator[pd.DataFrame], state: GroupState):
         frame = rows.extend(rows.load(state), batches)
-        buf = list(zip(frame[ts_col], frame[value_col]))
+        # (start, last, n, total) per session: a gap >= ``gap`` splits,
+        # as session_window merges
+        sessions: list[tuple[int, int, int, float]] = []
+        for t, v in sorted(zip(frame[ts_col], frame[value_col])):
+            if sessions and t - sessions[-1][1] < gap_us:
+                start, _, n, total = sessions[-1]
+                sessions[-1] = (start, t, n + 1, total + v)
+            else:
+                sessions.append((t, t, 1, v))
+        # "onTimer": the watermark passed last + gap. Sessions end in
+        # start order, so the pending ones are a suffix.
         wm_us = state.getCurrentWatermarkMs() * 1000
-        done, keep = _finalize_sessions(buf, gap_us, wm_us)
-        if keep:
-            rows.save(state, pd.DataFrame(keep, columns=rows.cols))
+        done = [d for d in sessions if d[1] + gap_us <= wm_us]
+        pending = sessions[len(done):]
+        if pending:
+            rows.save(state, frame[frame[ts_col] >= pending[0][0]])
             # re-arm at the earliest pending finalization point
             # (registerEventTimeTimer)
-            nxt = min(
-                last + gap_us for _, last, _, _ in _gap_sessions(keep, gap_us)
+            state.setTimeoutTimestamp(
+                _timer_ms(pending[0][1] + gap_us, wm_us)
             )
-            state.setTimeoutTimestamp(_timer_ms(nxt, wm_us))
         else:
             state.remove()
         if done:
-            yield _session_frame(key_col, key, done, gap_us)
+            yield pd.DataFrame(
+                {
+                    key_col: [key[0]] * len(done),
+                    "session_start": pd.to_datetime(
+                        [d[0] for d in done], unit="us"
+                    ),
+                    "session_end": pd.to_datetime(
+                        [d[1] + gap_us for d in done], unit="us"
+                    ),
+                    "n": [d[2] for d in done],
+                    "total": [d[3] for d in done],
+                }
+            )
 
     return src.groupBy(key_col).applyInPandasWithState(
         fn,
-        outputStructType=_session_schema(src, key_col),
+        outputStructType=(
+            f"{key_col} {_dt(src, key_col)}, session_start timestamp, "
+            "session_end timestamp, n bigint, total double"
+        ),
         stateStructType=rows.schema,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def timer_session_agg_tws(
-    events: DataFrame,
-    key_col: str,
-    ts_col: str,
-    value_col: str,
-    *,
-    gap: str = "10 minutes",
-    delay: str = "10 minutes",
-) -> DataFrame:
-    """N-timer generalization of :func:`timer_session_agg` on Spark 4's
-    ``transformWithStateInPandas`` (timeMode='EventTime'): ONE REGISTERED
-    TIMER PER PENDING SESSION via ``handle.registerTimer`` /
-    ``handleExpiredTimer`` — the exact shape of the reference's
-    ``registerEventTimeTimer``/``onTimer`` multi-timer service
-    (InternalTimerServiceImpl keeps a timer heap per key; GroupState
-    offers only a single timeout slot, which timer_session_agg works
-    around by re-arming at the earliest pending point).
-
-    Output schema and session semantics are identical to
-    timer_session_agg — the parity test asserts it where runnable. The
-    Python transformWithState transport requires the ``protobuf``
-    package; where absent this raises ImportError with guidance (the
-    GroupState form runs everywhere).
-    """
-    try:
-        import google.protobuf  # noqa: F401  (transformWithState transport)
-    except ImportError as exc:
-        raise ImportError(
-            "transformWithStateInPandas needs the 'protobuf' package; "
-            "use timer_session_agg (GroupState form, identical "
-            "semantics for this operator) where it is unavailable"
-        ) from exc
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap_us = _interval_ms(gap) * 1000
-    src = events.select(key_col, ts_col, value_col).withWatermark(
-        ts_col, delay
-    )
-
-    class SessionTimers(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._h = handle
-            self._buf = handle.getListState("buf", "t_us bigint, v double")
-
-        def _load(self):
-            return [(int(r[0]), float(r[1])) for r in self._buf.get()]
-
-        def _sync_timers(self, pending):
-            """One event-time timer per pending session end (ms)."""
-            want = {_timer_ms(last + gap_us) for _, last, _, _ in pending}
-            have = set(self._h.listTimers())
-            for ts in have - want:
-                self._h.deleteTimer(ts)
-            for ts in want - have:
-                self._h.registerTimer(ts)
-
-        def _finalize(self, key, wm_us):
-            done, keep = _finalize_sessions(self._load(), gap_us, wm_us)
-            if keep:
-                self._buf.put([(t, v) for t, v in keep])
-            else:
-                self._buf.clear()
-            self._sync_timers(_gap_sessions(keep, gap_us))
-            if done:
-                yield _session_frame(key_col, key, done, gap_us)
-
-        def handleInputRows(self, key, rows, timerValues):
-            buf = self._load()
-            for pdf in rows:
-                if not len(pdf):
-                    continue
-                us = (
-                    pdf[ts_col].values.astype("datetime64[us]")
-                    .astype("int64")
-                )
-                buf.extend(
-                    (int(t), float(v)) for t, v in zip(us, pdf[value_col])
-                )
-            self._buf.put([(t, v) for t, v in buf])
-            wm_us = timerValues.getCurrentWatermarkInMs() * 1000
-            yield from self._finalize(key, wm_us)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            wm_us = max(
-                timerValues.getCurrentWatermarkInMs(),
-                expiredTimerInfo.getExpiryTimeInMs(),
-            ) * 1000
-            yield from self._finalize(key, wm_us)
-
-        def close(self) -> None:
-            pass
-
-    return src.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=SessionTimers(),
-        outputStructType=_session_schema(src, key_col),
-        outputMode="Append",
-        timeMode="EventTime",
     )
 
 
@@ -1113,7 +947,10 @@ def stream_ewma_anomaly(
     Determinism: bucket sums accumulate as integer cents (exact,
     order-proof — equal to the batch DECIMAL(18,2) sum) and the
     recurrence uses the same fixed IEEE op order as the batch kernel,
-    so finalized rows match the batch operator bit-for-bit.
+    so finalized rows match the batch operator bit-for-bit. A NULL value
+    adds nothing to its bucket, as the batch ``SUM`` ignores it; a bucket
+    whose values are all NULL emits no row (the batch operator gives it
+    a NULL ``x``).
 
     Event-time timers re-arm at the next pending bucket's end (1 ms
     early, the repo's timer boundary rule) so buffered buckets flush
@@ -1141,8 +978,7 @@ def stream_ewma_anomaly(
         else:
             has_s, s_prev, pend = False, 0.0, {}
         for pdf in batches:
-            if not len(pdf):
-                continue
+            pdf = pdf.dropna(subset=[value_col])  # SUM ignores NULL
             us = pdf[ts_col].values.astype("datetime64[us]").astype("int64")
             for t, v in zip(us, pdf[value_col]):
                 b = (int(t) // bucket_us) * bucket_us

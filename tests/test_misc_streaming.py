@@ -398,70 +398,6 @@ def test_timer_session_agg_fires_and_retains(spark):
     }
 
 
-def _protobuf_available() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def test_timer_session_agg_tws_gating_or_parity(spark):
-    """timer_session_agg_tws (transformWithStateInPandas, one registered
-    timer per pending session): where the protobuf transport exists it
-    must produce EXACTLY the GroupState form's sessions; where it does
-    not, it must raise a descriptive ImportError pointing at the
-    always-available form."""
-    import datetime as dt
-    import tempfile
-
-    import pytest
-
-    from flink_psl_spark.streaming import run_to_memory_table, timer_session_agg
-    from flink_psl_spark.streaming.stateful import timer_session_agg_tws
-
-    TS = lambda m, s=0: dt.datetime(2024, 1, 1, 0, m, s)  # noqa: E731
-    schema = "k string, ts timestamp, v double"
-    rows = [
-        ("a", TS(0), 1.0), ("a", TS(1), 2.0),
-        ("a", TS(20), 5.0),
-        ("b", TS(50), 0.5),
-    ]
-    d = tempfile.mkdtemp(prefix="fps_tsess_tws_")
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(f"{d}/src")
-
-    def stream():
-        return spark.readStream.schema(schema).parquet(f"{d}/src")
-
-    if not _protobuf_available():
-        with pytest.raises(ImportError, match="protobuf.*timer_session_agg"):
-            timer_session_agg_tws(
-                stream(), "k", "ts", "v",
-                gap="10 minutes", delay="10 minutes",
-            )
-        pytest.skip(
-            "protobuf transport absent — transformWithStateInPandas "
-            "cannot run here; ImportError contract verified, parity "
-            "runs where protobuf is installed"
-        )
-
-    def collect(op):
-        out = op(
-            stream(), "k", "ts", "v", gap="10 minutes", delay="10 minutes"
-        )
-        return {
-            (r["k"], r["session_start"], r["session_end"], r["n"], r["total"])
-            for r in run_to_memory_table(out, output_mode="append").collect()
-        }
-
-    want = collect(timer_session_agg)
-    assert collect(timer_session_agg_tws) == want
-    assert want == {
-        ("a", TS(0), TS(11), 2, 3.0),
-        ("a", TS(20), TS(30), 1, 5.0),
-    }
-
-
 def test_stream_gap_fill_carries_past_last_observation(spark, tmp_path):
     from pyspark.sql import functions as F
 

@@ -1,4 +1,5 @@
-"""GroupState across micro-batch boundaries: every row-buffering operator
+"""GroupState across micro-batch boundaries: every keyed-state operator
+whose result does not depend on how its input splits into micro-batches
 gives the same full rows (payload included) whether its input arrives as
 one micro-batch or as four, and both equal the batch equivalent.
 
@@ -7,6 +8,10 @@ columns (one NULL payload cell — it turns the payload float64 in the
 input batches), written as 4 files in event-time order. Rows wait in
 state between batches, so a value the state round trip loses shows up
 as a difference from the model.
+
+``connect_keyed``, ``with_current_watermark`` and ``stream_space_saving``
+are not in the table: their output depends on the split (each one's
+docstring says how).
 """
 
 from __future__ import annotations
@@ -24,6 +29,9 @@ import pytest
 SCHEMA = "k bigint, o bigint, ts timestamp, v bigint, p bigint, x double"
 T0 = dt.datetime(2024, 1, 1)
 NULL_P = 7  # key 2's top value, first file: waits in state all replay
+# one row in four per key dropped: a key's rows are 5 minutes apart,
+# with a 10-minute hole every 20 minutes (ts = T0 + o minutes)
+HOLES = "o % 20 < 15"
 
 
 def _rows() -> pd.DataFrame:
@@ -168,6 +176,99 @@ def _event_time_sort_model(df):
     return out[["k", "emit_seq", "ts", "o", "v", "p"]]
 
 
+def _running_agg(s):
+    from flink_psl_spark.streaming import keyed_running_agg
+
+    return keyed_running_agg(s, "k", "p")
+
+
+def _running_agg_model(df):
+    p = df.groupby("k")["p"]
+    return pd.DataFrame(
+        {
+            "cnt": p.size(),
+            "total": p.sum().astype(float),
+            "min_v": p.min().astype(float),
+            "max_v": p.max().astype(float),
+        }
+    ).reset_index()
+
+
+def _sessions(s):
+    from flink_psl_spark.streaming import timer_session_agg
+
+    return timer_session_agg(
+        s.where(HOLES), "k", "ts", "v", gap="8 minutes", delay="0 seconds"
+    )
+
+
+def _sessions_model(df):
+    df = df.query(HOLES)
+    gap, wm = pd.Timedelta("8 minutes"), df["ts"].max()
+    out = []
+    for k, g in df.sort_values("ts").groupby("k"):
+        for _, sess in g.groupby((g["ts"].diff() >= gap).cumsum()):
+            end = sess["ts"].iloc[-1] + gap
+            if end <= wm:
+                out.append(
+                    (k, sess["ts"].iloc[0], end, len(sess),
+                     float(sess["v"].sum()))
+                )
+    return pd.DataFrame(out)
+
+
+def _gap_fill(s):
+    from flink_psl_spark.streaming import stream_gap_fill
+
+    return stream_gap_fill(
+        s.where(HOLES), "k", "ts", "v", bucket_ms=300_000, delay="0 seconds"
+    )
+
+
+def _gap_fill_model(df):
+    df = df.query(HOLES)
+    step, wm = pd.Timedelta("5 minutes"), df["ts"].max()
+    out = []
+    for k, g in df.sort_values("ts").groupby("k"):
+        obs = g.groupby(g["ts"].dt.floor(step))["v"].last()
+        b, carry = obs.index[0], None
+        while b + step <= wm:
+            if b in obs.index:
+                carry = float(obs[b])
+            out.append((k, b, carry, b not in obs.index))
+            b += step
+    return pd.DataFrame(out)
+
+
+EWMA_THRESHOLD = 8000.0
+
+
+def _ewma(s):
+    from pyspark.sql import functions as F
+
+    from flink_psl_spark.streaming import stream_ewma_anomaly
+
+    out = stream_ewma_anomaly(
+        s, "k", "ts", "p", bucket_ms=3_600_000,
+        threshold=EWMA_THRESHOLD, delay="0 seconds",
+    )
+    return out.select(  # the batch operator's rounding
+        "k", "bucket_ts", F.round("x", 2).alias("x"),
+        F.round("smoothed", 6).alias("smoothed"),
+        F.round("residual", 6).alias("residual"), "anomaly",
+    )
+
+
+def _ewma_batch(df):
+    from pyspark.sql import functions as F
+
+    from flink_psl_spark.operators import ewma_anomaly
+
+    out = ewma_anomaly(df, "k", "ts", "p", threshold=EWMA_THRESHOLD)
+    wm = F.lit(T0 + dt.timedelta(minutes=199))  # the final watermark
+    return out.where(F.col("bucket_ts") + F.expr("INTERVAL 1 HOUR") <= wm)
+
+
 def _cep_steps():
     from flink_psl_spark.cep import Measure, Step
 
@@ -189,26 +290,52 @@ def _match_recognize(s):
     )
 
 
-def _match_recognize_batch(spark, path):
+def _match_recognize_batch(df):
     from flink_psl_spark.cep import match_recognize
 
     pattern, measures = _cep_steps()
-    return match_recognize(
-        spark.read.schema(SCHEMA).parquet(path), "k", ["ts", "o"],
-        pattern, measures,
-    )
+    return match_recognize(df, "k", ["ts", "o"], pattern, measures)
+
+
+def _pandas(model):
+    return lambda spark, path: _model_rows(model(_rows()))
+
+
+def _batch(op):
+    def want(spark, path):
+        rows = op(spark.read.schema(SCHEMA).parquet(path)).collect()
+        return Counter(tuple(r) for r in rows)
+
+    return want
 
 
 CASES = {
-    # name: (operator, output mode, pandas model or batch equivalent)
-    "keyed_top_n": (_top_n, "update", _top_n_model),
-    "keyed_count_window": (_count_window, "append", _count_window_model),
-    "streaming_rows_over": (_rows_over, "append", _rows_over_model),
-    "streaming_range_over": (_range_over, "append", _range_over_model),
-    "streaming_event_time_sort": (
-        _event_time_sort, "append", _event_time_sort_model
+    # name: (operator, output mode, key columns of an update row,
+    #        expected rows from a pandas model or the batch equivalent)
+    "keyed_top_n": (_top_n, "update", 2, _pandas(_top_n_model)),
+    "keyed_running_agg": (
+        _running_agg, "update", 1, _pandas(_running_agg_model)
     ),
-    "streaming_match_recognize": (_match_recognize, "append", None),
+    "keyed_count_window": (
+        _count_window, "append", None, _pandas(_count_window_model)
+    ),
+    "streaming_rows_over": (
+        _rows_over, "append", None, _pandas(_rows_over_model)
+    ),
+    "streaming_range_over": (
+        _range_over, "append", None, _pandas(_range_over_model)
+    ),
+    "streaming_event_time_sort": (
+        _event_time_sort, "append", None, _pandas(_event_time_sort_model)
+    ),
+    "timer_session_agg": (
+        _sessions, "append", None, _pandas(_sessions_model)
+    ),
+    "stream_gap_fill": (_gap_fill, "append", None, _pandas(_gap_fill_model)),
+    "stream_ewma_anomaly": (_ewma, "append", None, _batch(_ewma_batch)),
+    "streaming_match_recognize": (
+        _match_recognize, "append", None, _batch(_match_recognize_batch)
+    ),
 }
 
 
@@ -219,18 +346,72 @@ CASES = {
 def test_state_survives_micro_batches(spark, src, case, one_file_per_batch):
     from flink_psl_spark.streaming import run_to_memory_table
 
-    op, mode, model = CASES[case]
+    op, mode, keys, want = CASES[case]
     out = run_to_memory_table(
         op(_stream(spark, src, one_file_per_batch)), output_mode=mode,
         shuffle_partitions=2,
     )
     rows = [tuple(r) for r in out.collect()]
-    if mode == "update":  # final state: the last update per (key, rank)
-        rows = list({r[:2]: r for r in rows}.values())
-    if model is None:
-        want = Counter(
-            tuple(r) for r in _match_recognize_batch(spark, src).collect()
+    if mode == "update":  # final state: the last update per key
+        rows = list({r[:keys]: r for r in rows}.values())
+    assert Counter(rows) == want(spark, src)
+
+
+@pytest.fixture(scope="module")
+def null_first(tmp_path_factory) -> str:
+    """Two files: key 1 holds one NULL value in the first and 3.0 in the
+    second; key 2 holds 5.0, then 1.0."""
+    d = tmp_path_factory.mktemp("null_first_src")
+    for n, vals in enumerate([[None, 5.0], [3.0, 1.0]]):
+        f = str(d / f"part-{n}.parquet")
+        pq.write_table(
+            pa.table(
+                {"k": pa.array([1, 2], pa.int64()),
+                 "v": pa.array(vals, pa.float64())}
+            ),
+            f,
         )
-    else:
-        want = _model_rows(model(_rows()))
-    assert Counter(rows) == want
+        os.utime(f, (1_700_000_000 + n * 100,) * 2)  # replay order
+    return str(d)
+
+
+def _running_agg_last(spark, path, one_file_per_batch, ttl_ms=None):
+    """Each key's last update from keyed_running_agg over ``path``."""
+    from flink_psl_spark.streaming import keyed_running_agg, run_to_memory_table
+
+    stream = spark.readStream.schema("k bigint, v double")
+    if one_file_per_batch:
+        stream = stream.option("maxFilesPerTrigger", 1)
+    out = run_to_memory_table(
+        keyed_running_agg(stream.parquet(path), "k", "v", ttl_ms=ttl_ms),
+        output_mode="update", shuffle_partitions=2,
+    )
+    return {r["k"]: tuple(r) for r in out.collect()}
+
+
+@pytest.mark.parametrize(
+    "one_file_per_batch", [False, True], ids=["1batch", "2batches"]
+)
+def test_running_agg_folds_only_non_null_values(
+    spark, null_first, one_file_per_batch
+):
+    """A key whose first batch held only a NULL value still gets the
+    later value's min and max; ``cnt`` counts every row (COUNT(*))."""
+    assert _running_agg_last(spark, null_first, one_file_per_batch) == {
+        1: (1, 2, 3.0, 3.0, 3.0),
+        2: (2, 2, 6.0, 1.0, 5.0),
+    }
+
+
+@pytest.mark.parametrize(
+    "ttl_ms, want",
+    [
+        (None, {1: (1, 2, 3.0, 3.0, 3.0), 2: (2, 2, 6.0, 1.0, 5.0)}),
+        (1, {1: (1, 1, 3.0, 3.0, 3.0), 2: (2, 1, 1.0, 1.0, 1.0)}),
+    ],
+    ids=["no_ttl", "ttl_1ms"],
+)
+def test_running_agg_ttl_expires_on_read(spark, null_first, ttl_ms, want):
+    """Two micro-batches further apart than ``ttl_ms`` in processing
+    time: the second batch finds the first one's values expired."""
+    assert _running_agg_last(spark, null_first, True, ttl_ms) == want
