@@ -2214,15 +2214,16 @@ def schema_contract_migration(spark, sf_dir):
 # Recursive CTEs (WITH RECURSIVE, new in Spark 4) — the declarative SQL
 # analogue of the reference's bounded iterations
 # (flink-streaming-java/.../api/datastream/IterativeStream.java:57 and the
-# driver-loop form in datastream.py:120). Each recursion step is one join
-# against the ranked anchor table; Spark executes the loop as iterative
-# stages with the per-level frontier as the only growing state, so at
-# 100 TB the cost is (max chain depth) joins on the chain key — the same
-# shape the reference's iteration feedback edge pays. Depth is bounded
-# (spark.sql.cteRecursionLevelLimit defaults to 100; chains here are <=25).
-# One SQL text runs verbatim on both engines (event_paths); the order
-# chain hoists its loop-invariant rank on the Spark side — see docstring.
-# The materialized rank binds to the text as a spark.sql frame argument
+# driver-loop form in datastream.py:120). Spark runs the loop as a
+# UnionLoop that re-executes the recursive member once per level, so the
+# member is kept JOIN-FREE: the anchor carries each key's loop-invariant
+# values as arrays already in rank order, and a level only steps an index
+# into them (Project <- Filter <- UnionLoopRef: no join, exchange or scan
+# per level). Each recursion row carries its key's arrays, O(k^2) bytes
+# per key for a chain of k <= spark.sql.cteRecursionLevelLimit (100;
+# chains here are <= 25), in exchange for zero shuffles per level. The
+# oracle keeps the textbook join form; both fold in the same order.
+# The anchor frame binds to the text as a spark.sql frame argument
 # ({view}): PySpark registers it under a unique name, analyzes the text
 # and drops the view before spark.sql returns, so concurrent callers
 # never share a name and nothing stays in the catalog.
@@ -2253,66 +2254,51 @@ def schema_contract_migration(spark, sf_dir):
     """,
 )
 def recursive_cte_order_chain(spark, sf_dir):
-    """WITH RECURSIVE over Spark's native UnionLoop, with the rank CTE
-    HOISTED: UnionLoop re-executes the recursive member once per level,
-    so an inlined `ranked` CTE re-ran the full window rank over orders
-    every iteration (iterations = longest order chain — ~11 s at sf0.1,
-    scan×levels at 100 TB). The rank is loop-invariant; materializing it
-    once (localCheckpoint, same idiom as the graph iterators) makes each
-    level a join against frozen lineage. Arithmetic is unchanged:
-    identical ROUND(cum + price, 2) fold order on both engines."""
-    from pyspark.sql import Window
-
+    """Running spend along each customer's order chain, WITH RECURSIVE
+    over Spark's native UnionLoop. The anchor holds one row per customer
+    with its order keys and prices as arrays sorted by (o_orderdate,
+    o_orderkey), so level ``step`` reads ``prices[step]`` from its own
+    row instead of joining the frontier back to a ranked orders table.
+    Every recursion row carries its customer's arrays, O(k^2) bytes for
+    k orders, in exchange for no shuffle per level. The fold is the
+    oracle's ROUND(cum + price, 2) in the same order, so the doubles are
+    identical."""
     t = tables(spark, sf_dir)
-    ranked = (
+    chains = (
         t["orders"]
+        .groupBy("o_custkey")
+        .agg(
+            F.sort_array(
+                F.collect_list(
+                    F.struct(
+                        "o_orderdate",
+                        "o_orderkey",
+                        F.col("o_totalprice").cast("double").alias("price"),
+                    )
+                )
+            ).alias("s")
+        )
         .select(
             "o_custkey",
-            "o_orderkey",
-            F.col("o_totalprice").cast("double").alias("price"),
-            "o_orderdate",
+            F.col("s.o_orderkey").alias("keys"),
+            F.col("s.price").alias("prices"),
         )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("o_custkey").orderBy(
-                    "o_orderdate", "o_orderkey"
-                )
-            ),
-        )
-        .select("o_custkey", "o_orderkey", "price", "rn")
     )
-    # SHUFFLE_HASH with the FRONTIER (c) as build side: the r12 profile
-    # showed SHUFFLE_HASH(r) rebuilding a ranked-table hash map (150k
-    # rows, 38 MiB, ~60 ms) at EVERY UnionLoop level to probe a frontier
-    # of 59 → 2 rows. The frontier is a strict subset of the customers
-    # in ranked, so building it is always the smaller (memory-safer)
-    # side, and the big frozen view streams past as the probe — r13 A/B
-    # at sf0.1: 5.8-6.4 s → 5.0-5.6 s, identical checksum. Broadcasting
-    # the frontier stays rejected (level-1 frontier is every customer —
-    # unbounded at 100 TB; a shuffled-hash build is per-partition).
-    # Per-level floor note: the ranked side re-exchanges each level
-    # because the join key is COMPOSITE (o_custkey, rn = step+1) — a
-    # checkpoint partitioned by o_custkey alone cannot satisfy it, and
-    # pinning partitions (repartition before the checkpoint) measured
-    # 2x SLOWER locally (32 fixed tasks x ~40 levels vs AQE-coalesced).
     return spark.sql(
         """
-        WITH RECURSIVE chain (o_custkey, o_orderkey, step, cum) AS (
-          SELECT o_custkey, o_orderkey, 1, ROUND(price, 2)
-          FROM {view} WHERE rn = 1
+        WITH RECURSIVE chain (o_custkey, keys, prices, step, cum) AS (
+          SELECT o_custkey, keys, prices, 1, ROUND(prices[0], 2)
+          FROM {view}
           UNION ALL
-          SELECT /*+ SHUFFLE_HASH(c) */
-                 r.o_custkey, r.o_orderkey, c.step + 1,
-                 ROUND(c.cum + r.price, 2)
-          FROM chain c JOIN {view} r
-            ON r.o_custkey = c.o_custkey AND r.rn = c.step + 1
+          SELECT o_custkey, keys, prices, step + 1,
+                 ROUND(cum + prices[step], 2)
+          FROM chain WHERE step < size(prices)
         )
-        SELECT o_custkey, o_orderkey, CAST(step AS INT) AS step,
-               ROUND(cum, 2) AS cum_spend
+        SELECT o_custkey, keys[step - 1] AS o_orderkey,
+               CAST(step AS INT) AS step, ROUND(cum, 2) AS cum_spend
         FROM chain
         """,
-        view=ranked.transform(materialize),
+        view=chains,
     )
 
 @query(
@@ -2340,16 +2326,16 @@ def recursive_cte_order_chain(spark, sf_dir):
     """,
 )
 def recursive_cte_event_paths(spark, sf_dir):
-    """Event-path enumeration via WITH RECURSIVE, rank CTE hoisted: the
-    inlined `ev` CTE re-ranked the FULL events table on every UnionLoop
-    level (5 levels = 5 scans+windows of the fact table — the dominant
-    cost at 100 TB). The per-user event rank is loop-invariant; each
-    level only needs rows with rn <= 5, so the materialized view also
-    pre-filters to the probe depth. String/packing arithmetic unchanged."""
+    """Event-path enumeration via WITH RECURSIVE: the anchor keeps each
+    user's first five event types (a row_number <= 5 that Spark plans as
+    a WindowGroupLimit, run once) as an array in (ts, event_id) order,
+    and level ``depth`` appends ``types[depth]`` from its own row. Each
+    recursion row carries that array (at most five entries) instead of
+    joining back to the ranked events every level."""
     from pyspark.sql import Window
 
     t = tables(spark, sf_dir)
-    ev = (
+    firsts = (
         t["events"]
         .withColumn(
             "rn",
@@ -2357,19 +2343,23 @@ def recursive_cte_event_paths(spark, sf_dir):
                 Window.partitionBy("user_id").orderBy("ts", "event_id")
             ),
         )
-        .where(F.col("rn") <= 5)  # recursion probes rn = depth+1 <= 5
-        .select("user_id", "event_type", "rn")
+        .where(F.col("rn") <= 5)
+        .groupBy("user_id")
+        .agg(
+            F.sort_array(
+                F.collect_list(F.struct("rn", "event_type"))
+            ).alias("s")
+        )
+        .select("user_id", F.col("s.event_type").alias("types"))
     )
     return spark.sql(
         """
-        WITH RECURSIVE paths (user_id, path, depth) AS (
-          SELECT user_id, event_type, 1
-          FROM {view} WHERE rn = 1
+        WITH RECURSIVE paths (user_id, types, path, depth) AS (
+          SELECT user_id, types, types[0], 1
+          FROM {view}
           UNION ALL
-          SELECT e.user_id, p.path || '>' || e.event_type, p.depth + 1
-          FROM paths p JOIN {view} e
-            ON e.user_id = p.user_id AND e.rn = p.depth + 1
-          WHERE p.depth < 5
+          SELECT user_id, types, path || '>' || types[depth], depth + 1
+          FROM paths WHERE depth < size(types)
         )
         SELECT CAST(depth AS INT) AS depth, path,
                CAST(COUNT(*) AS BIGINT) AS n_users
@@ -2377,7 +2367,7 @@ def recursive_cte_event_paths(spark, sf_dir):
         GROUP BY depth, path
         HAVING COUNT(*) >= 5
         """,
-        view=ev.transform(materialize),
+        view=firsts,
     )
 
 

@@ -633,7 +633,9 @@ def timer_session_agg(
     >= gap inactivity, emits every session whose (last + gap) the
     watermark has passed, retains the rest and re-arms. Emits
     (key, session_start, session_end, n, total) — session_end =
-    last + gap, exactly session_window's bound.
+    last + gap, exactly session_window's bound; ``n`` counts every row
+    and ``total`` sums the non-NULL values (NULL when all are NULL), as
+    the batch COUNT(*) and SUM do.
 
     State per key = the un-finalized tail (bounded by the watermark: rows
     older than wm - gap always finalize on the next firing), plus one
@@ -648,12 +650,16 @@ def timer_session_agg(
     def fn(key, batches: Iterator[pd.DataFrame], state: GroupState):
         frame = rows.extend(rows.load(state), batches)
         # (start, last, n, total) per session: a gap >= ``gap`` splits,
-        # as session_window merges
-        sessions: list[tuple[int, int, int, float]] = []
+        # as session_window merges; n counts every row (COUNT(*)), total
+        # folds the non-NULL values (SUM: None while it has seen none)
+        sessions: list[tuple[int, int, int, float | None]] = []
         for t, v in sorted(zip(frame[ts_col], frame[value_col])):
+            v = None if pd.isna(v) else v
             if sessions and t - sessions[-1][1] < gap_us:
                 start, _, n, total = sessions[-1]
-                sessions[-1] = (start, t, n + 1, total + v)
+                if v is not None:
+                    total = v if total is None else total + v
+                sessions[-1] = (start, t, n + 1, total)
             else:
                 sessions.append((t, t, 1, v))
         # "onTimer": the watermark passed last + gap. Sessions end in
@@ -844,7 +850,10 @@ def stream_gap_fill(
     continuous form of operators.windows.gap_fill: per key, emit one
     append-mode row per ``bucket_ms`` bucket as soon as the watermark
     finalizes it (bucket end <= wm), carrying the latest value across
-    empty buckets and marking carried rows ``filled``.
+    empty buckets and marking carried rows ``filled``. A bucket's
+    observation is its latest row; when that row's value is NULL the
+    bucket is ``filled`` with the carried value, as the batch operator's
+    ``last(ignorenulls)`` does.
 
     Unlike the batch operator (whose grid stops at the last
     observation), the stream keeps emitting carried buckets while the
@@ -886,15 +895,19 @@ def stream_gap_fill(
             b = start
             i = 0
             while b + gap_us <= wm_us:
-                observed = False
+                # the bucket's observation is its latest row, as in the
+                # batch operator; a NULL one leaves the bucket filled
+                # with the carried value (last(ignorenulls))
+                latest = None
                 while i < len(buf) and buf[i][0] < b + gap_us:
-                    carry = buf[i][1]
                     if buf[i][0] >= b:
-                        observed = True
+                        latest = buf[i][1]
                     i += 1
-                if carry is not None:
-                    out.append((b, carry, not observed))
-                    last_us = b
+                observed = not pd.isna(latest)
+                if observed:
+                    carry = latest
+                out.append((b, carry, not observed))
+                last_us = b
                 b += gap_us
             buf = buf[i:]
         rows.save(state, pd.DataFrame(buf, columns=rows.cols), last_us, carry)

@@ -624,20 +624,34 @@ def test_cosine_topk_norms_not_recomputed_per_pair(spark, t):
     assert p.count("SQRT") <= 2
 
 
-def test_recursive_cte_rank_hoisted_out_of_loop(spark, t):
-    """UnionLoop re-executes the recursive member per level, so the rank
-    CTE must be materialized lineage (Scan ExistingRDD), not an inlined
-    Window that would re-rank the fact table every iteration."""
+def _tree(plan) -> list:
+    """Every node of a Catalyst tree (logical or physical), pre-order."""
+    out = [plan]
+    kids = plan.children()
+    for i in range(kids.size()):
+        out += _tree(kids.apply(i))
+    return out
+
+
+def test_recursive_cte_member_is_join_free(spark, t):
+    """UnionLoop re-executes its recursive member once per level, so the
+    member must read only the previous level: no Join, Exchange, Window
+    or relation scan, only operators over UnionLoopRef (the anchor
+    carries each key's values as arrays)."""
     from flink_psl_spark.queries import QUERIES
 
     for name in ("recursive_cte_order_chain", "recursive_cte_event_paths"):
         out = QUERIES[name](spark, "/root/testdata/sf0.001")
-        p = _plan(out)
-        assert "UnionLoop" in p, name          # still the native recursion
-        # rank frozen outside the loop (UnionLoop prints its members in
-        # logical form — LogicalRDD — rather than Scan ExistingRDD)
-        assert "LogicalRDD" in p or "Scan ExistingRDD" in p, name
-        assert "Window" not in p, name         # no per-level re-rank
+        plan = out._jdf.queryExecution().sparkPlan()
+        loops = [n for n in _tree(plan) if n.nodeName() == "UnionLoop"]
+        assert len(loops) == 1, name          # still the native recursion
+        member = _tree(loops[0].recursion())
+        names = [n.nodeName() for n in member]
+        for banned in ("Join", "Exchange", "Window", "Relation", "Scan",
+                       "LogicalRDD"):
+            assert not any(banned in n for n in names), (name, names)
+        leaves = [n.nodeName() for n in member if n.children().isEmpty()]
+        assert leaves == ["UnionLoopRef"], (name, names)
 
 
 def test_language_id_plan_is_linear_in_profiles(spark, t):

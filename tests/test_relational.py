@@ -100,8 +100,9 @@ def test_filter_pushdown_reaches_scan(spark, sf_dir):
 
 def test_recursive_cte_concurrent_builds_leave_no_views(spark, sf_dir):
     """Two threads build and collect recursive_cte_order_chain at once:
-    each binds its materialized rank to the SQL text as a spark.sql frame
-    argument, both get the same rows, and neither leaves a view behind."""
+    each binds its per-customer anchor frame to the SQL text as a
+    spark.sql frame argument, both get the same rows, and neither leaves
+    a view behind."""
     import threading
     from concurrent.futures import ThreadPoolExecutor
 
@@ -124,6 +125,27 @@ def test_recursive_cte_concurrent_builds_leave_no_views(spark, sf_dir):
         a, b = pool.map(run, range(2))
     assert a and a == b
     assert views() == before
+
+
+def test_recursive_cte_jobs_scale_with_depth_not_joins(spark, sf_dir):
+    """Perf-only regression guard: a UnionLoop level of
+    recursive_cte_order_chain is one narrow step, so building and
+    running the query takes at most two Spark jobs per recursion level.
+    A shuffle join in the recursive member costs about five per level
+    (107 jobs for an 18-level chain at sf0.001)."""
+    from flink_psl_spark.queries import QUERIES
+
+    sc = spark.sparkContext
+    group = "recursive_cte_jobs"
+    try:
+        sc.setJobGroup(group, group)
+        rows = QUERIES["recursive_cte_order_chain"](spark, sf_dir).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    depth = max(r["step"] for r in rows)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 2 * depth, (jobs, depth)
 
 
 def test_tables_repoints_fixture_views(spark, sf_dir, tmp_path):

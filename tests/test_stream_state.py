@@ -198,11 +198,13 @@ def _sessions(s):
     from flink_psl_spark.streaming import timer_session_agg
 
     return timer_session_agg(
-        s.where(HOLES), "k", "ts", "v", gap="8 minutes", delay="0 seconds"
+        s.where(HOLES), "k", "ts", "p", gap="8 minutes", delay="0 seconds"
     )
 
 
 def _sessions_model(df):
+    """Key 2's first session holds the NULL ``p`` cell: COUNT(*) counts
+    it, SUM skips it."""
     df = df.query(HOLES)
     gap, wm = pd.Timedelta("8 minutes"), df["ts"].max()
     out = []
@@ -210,9 +212,10 @@ def _sessions_model(df):
         for _, sess in g.groupby((g["ts"].diff() >= gap).cumsum()):
             end = sess["ts"].iloc[-1] + gap
             if end <= wm:
+                total = sess["p"].sum(min_count=1)
                 out.append(
                     (k, sess["ts"].iloc[0], end, len(sess),
-                     float(sess["v"].sum()))
+                     None if pd.isna(total) else float(total))
                 )
     return pd.DataFrame(out)
 
@@ -221,21 +224,25 @@ def _gap_fill(s):
     from flink_psl_spark.streaming import stream_gap_fill
 
     return stream_gap_fill(
-        s.where(HOLES), "k", "ts", "v", bucket_ms=300_000, delay="0 seconds"
+        s.where(HOLES), "k", "ts", "p", bucket_ms=300_000, delay="0 seconds"
     )
 
 
 def _gap_fill_model(df):
+    """A bucket's observation is its latest row. Key 2's bucket at
+    minute 5 holds only the NULL ``p`` cell, so it is filled with the
+    previous bucket's value, as batch gap_fill's last(ignorenulls)."""
     df = df.query(HOLES)
     step, wm = pd.Timedelta("5 minutes"), df["ts"].max()
     out = []
     for k, g in df.sort_values("ts").groupby("k"):
-        obs = g.groupby(g["ts"].dt.floor(step))["v"].last()
+        obs = g.groupby(g["ts"].dt.floor(step))["p"].last(skipna=False)
         b, carry = obs.index[0], None
         while b + step <= wm:
-            if b in obs.index:
+            observed = b in obs.index and not pd.isna(obs[b])
+            if observed:
                 carry = float(obs[b])
-            out.append((k, b, carry, b not in obs.index))
+            out.append((k, b, carry, not observed))
             b += step
     return pd.DataFrame(out)
 
