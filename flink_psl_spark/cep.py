@@ -9,10 +9,11 @@ AFTER MATCH skip policies, measures, and a WITHIN clause.
 
 Spark construction
 ------------------
-``match_recognize`` groups by the partition keys and runs the NFA inside
-``applyInPandas``: predicates are evaluated VECTORIZED per step over the
-whole partition (pandas eval of Column-like exprs compiled from Spark SQL
-via a projected boolean column — no per-row Python predicate calls), and
+``match_recognize`` runs the NFA once per partition key through
+:func:`~flink_psl_spark.grouped.grouped_map`, rows in ``order_by`` order:
+predicates are evaluated VECTORIZED per step over the whole partition
+(pandas eval of Column-like exprs compiled from Spark SQL via a
+projected boolean column — no per-row Python predicate calls), and
 only the index-level backtracking runs in Python. One shuffle on the
 partition key — the same cost shape as the reference's keyed CepOperator.
 
@@ -26,13 +27,14 @@ quantifier structure (contiguous, non-overlapping steps) keeps rare.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from flink_psl_spark.grouped import grouped_map
 
 
 @dataclass
@@ -443,60 +445,9 @@ def match_recognize(
                 # resume AT the variable's row; guarantee progress when the
                 # target equals the attempt position (single-row first var)
                 start = tgt if tgt > start else start + 1
-        if not out_rows:
-            return pd.DataFrame(
-                {f.name: pd.Series(dtype="object") for f in out_schema}
-            )
         return pd.DataFrame(out_rows)
 
-    # Execution: repartition on the keys, sort within partitions, then
-    # mapInPandas with a cross-batch key-boundary carry. applyInPandas would
-    # be the obvious construction but pays per-GROUP Arrow/conversion
-    # overhead — with high key cardinality and small groups (the common CEP
-    # shape) that overhead IS the runtime (measured ~6s for 10k single-digit
-    # row groups vs <2s this way). Here thousands of groups ride one Arrow
-    # batch and pandas groupby slices them in C.
-    def run_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-
-        def process(chunk: pd.DataFrame) -> Iterator[pd.DataFrame]:
-            # dropna=False: null partition keys form a group like Spark's
-            # groupBy does — silently skipping them would emit no matches
-            for _, g in chunk.groupby(keys, sort=False, dropna=False):
-                res = run(g.reset_index(drop=True))
-                if len(res):
-                    yield res
-
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            # rows are sorted by key: the last key's rows are a suffix that
-            # may continue in the next batch — hold them back
-            same_last = pd.Series(True, index=pdf.index)
-            for k in keys:
-                last = pdf[k].iloc[-1]
-                # null-safe equality: NaN == NaN is False in pandas, which
-                # would otherwise cut null-key runs out of the carry
-                if pd.isna(last):
-                    same_last &= pdf[k].isna()
-                else:
-                    same_last &= pdf[k] == last
-            cut = len(pdf) - int(same_last.iloc[::-1].cumprod().sum())
-            carry = pdf.iloc[cut:]
-            yield from process(pdf.iloc[:cut])
-        if carry is not None and len(carry):
-            yield from process(carry.reset_index(drop=True))
-
-    # explicit partition count: AQE would coalesce this exchange to a few
-    # partitions (it sizes for shuffle bytes), strangling the CPU-bound
-    # Python stage behind it
-    n_parts = prepared.sparkSession.sparkContext.defaultParallelism
-    sorted_part = prepared.repartition(
-        n_parts, *[F.col(k) for k in keys]
-    ).sortWithinPartitions(*keys, *order)
-    return sorted_part.mapInPandas(run_partition, out_schema)
+    return grouped_map(prepared, keys, run, out_schema, order)
 
 
 def _leaf_steps(pattern: list["Step"]) -> list["Step"]:

@@ -32,6 +32,7 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from flink_psl_spark.grouped import grouped_map
 from flink_psl_spark.materialize import materialize
 
 
@@ -204,21 +205,22 @@ class KeyedStream:
     ) -> "DataStream":
         """reduce (KeyedStream.java:743): fold rows per key in ``order_by``
         order; emits the final reduced row per key (batch semantics of the
-        rolling reduce's last value). Runs via applyInPandas per key."""
+        rolling reduce's last value). Runs as one :func:`grouped_map` call
+        per key, rows arriving in ``order_by`` order."""
         import pandas as pd
 
         order = [order_by] if isinstance(order_by, str) else list(order_by)
-        schema = self.df.schema
 
         def run(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            pdf = pdf.sort_values(order, kind="mergesort")
             rows = pdf.to_dict("records")
             acc = rows[0]
             for r in rows[1:]:
                 acc = fn(acc, r)
             return pd.DataFrame([acc])
 
-        return DataStream(self.df.groupBy(*self.keys).applyInPandas(run, schema))
+        return DataStream(
+            grouped_map(self.df, self.keys, run, self.df.schema, order)
+        )
 
     def _agg(self, col: str, agg: Column) -> "DataStream":
         return DataStream(self.df.groupBy(*self.keys).agg(agg.alias(col)))

@@ -122,12 +122,14 @@ class SqlGatewayService:
     # -- sessions ----------------------------------------------------------
     def open_session(self, properties: dict[str, str] | None = None) -> str:
         handle = str(uuid.uuid4())
-        # the opening properties are set on the clone as it is wrapped
         spark = SparkSession(
-            self.spark.sparkContext,
-            self.spark._jsparkSession.cloneSession(),
-            dict(properties or {}),
+            self.spark.sparkContext, self.spark._jsparkSession.cloneSession()
         )
+        # set like a SET statement: a static or Spark-core key fails the
+        # open with Spark's CANNOT_MODIFY_(STATIC_)CONFIG instead of being
+        # dropped
+        for k, v in (properties or {}).items():
+            spark.conf.set(k, v)
         with self._lock:
             self.sessions[handle] = Session(handle, spark)
         return handle

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from flink_psl_spark.grouped import grouped_map
 from flink_psl_spark.llm.text import token_count, tokenize
 
 
@@ -118,7 +119,6 @@ def pack_sequences_bfd(
     partition_col: str = "source",
     n_sub_shards: int = 64,
     length_col: str | None = None,
-    n_tasks: int = 8,
 ) -> DataFrame:
     """No-split sequence packing by best-fit-decreasing bin packing: each
     document lands WHOLE in exactly one bin of capacity ``max_len``
@@ -131,17 +131,11 @@ def pack_sequences_bfd(
     each shard splits into ``n_sub_shards`` deterministic HASH sub-shards
     (xxhash64 of the id — no per-shard global sort, no window; a
     row-number split would serialize a giant shard through one task's
-    sort) and BFD runs per sub-shard in an Arrow-batched kernel.
-    Results depend ONLY on ``n_sub_shards`` (the packing unit);
-    ``n_tasks`` is a pure execution knob — each Python task receives a
-    contiguous span of n_sub_shards/n_tasks sub-shards and packs them
-    via one in-pandas groupby, amortizing the per-group Arrow/worker
-    invocation cost (~4 ms/group: at 64 one-group tasks that overhead
-    DOMINATED the kernel). Memory per task is shard_size/n_tasks in
-    expectation, parallelism is shards × n_tasks; raise ``n_tasks``
-    (up to n_sub_shards) so that quotient fits an executor.
-    Deterministic: docs sort by (tokens desc, id asc) inside the
-    kernel, ties to the lowest bin id.
+    sort) and BFD runs once per (shard, sub-shard) through
+    :func:`grouped_map`, many sub-shards to an Arrow batch. Results
+    depend ONLY on ``n_sub_shards`` (the packing unit); memory per call
+    is one sub-shard. Deterministic: each sub-shard's docs arrive sorted
+    by (tokens desc, id asc), ties to the lowest bin id.
 
     Emits (shard, sub_shard, doc_id, n_tokens, bin_id, overflow).
     """
@@ -156,7 +150,6 @@ def pack_sequences_bfd(
         if length_col is not None
         else token_count(F.col(text_col))
     )
-    span = max(1, n_sub_shards // max(1, min(n_tasks, n_sub_shards)))
     src = docs.select(
         F.col(partition_col).alias("shard"),
         F.col(id_col),
@@ -164,12 +157,9 @@ def pack_sequences_bfd(
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_sub_shards)).alias(
             "sub_shard"
         ),
-    ).withColumn("__task", F.expr(f"sub_shard div {span}"))
+    )
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            ["n_tokens", id_col], ascending=[False, True]
-        ).reset_index(drop=True)
         fills: list[int] = []
         bin_ids, overflow = [], []
         for t in zip(pdf["n_tokens"]):
@@ -193,17 +183,7 @@ def pack_sequences_bfd(
         pdf["overflow"] = overflow
         return pdf
 
-    def pack_span(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one task = a span of sub-shards; BFD state never crosses a
-        # sub-shard (each inner group packs independently, same result
-        # as one-task-per-sub-shard)
-        out = [
-            pack(g) for _, g in pdf.groupby("sub_shard", sort=False)
-        ]
-        return pd.concat(out, ignore_index=True).drop(columns="__task")
-
-    return src.groupBy("shard", "__task").applyInPandas(
-        pack_span,
-        "shard string, doc_id bigint, n_tokens bigint, sub_shard bigint, "
-        "bin_id bigint, overflow boolean",
-    )
+    schema = "shard string, doc_id bigint, n_tokens bigint, sub_shard bigint, "
+    schema += "bin_id bigint, overflow boolean"
+    order = [F.col("n_tokens").desc(), id_col]
+    return grouped_map(src, ["shard", "sub_shard"], pack, schema, order)

@@ -22,6 +22,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from flink_psl_spark.grouped import grouped_map
 from flink_psl_spark.operators.ranking import top_n
 from flink_psl_spark.materialize import materialize
 from flink_psl_spark.parallelism import ensure_parallelism
@@ -539,8 +540,8 @@ def _tiled_exact_dups(
         )
     )
 
-    def tile(key, pdf):
-        ti, tj = key
+    def tile(pdf):
+        ti, tj = pdf["__ti"].iat[0], pdf["__tj"].iat[0]
         # NULL-cosine contract of the expression form: a NULL vector, or
         # a pair of DIFFERENT lengths, yields NULL sim and never drops
         # either side — so only same-length non-NULL groups are scored
@@ -581,9 +582,7 @@ def _tiled_exact_dups(
             return pd.DataFrame({"__dup": []})
         return pd.DataFrame({"__dup": np.unique(np.concatenate(out))})
 
-    return tiles.groupBy("__ti", "__tj").applyInPandas(
-        tile, schema=f"__dup {id_dt}"
-    )
+    return grouped_map(tiles, ["__ti", "__tj"], tile, f"__dup {id_dt}")
 
 
 def embedding_dedup(
@@ -1540,9 +1539,10 @@ def mmr_rerank(
     Scale shape: candidate generation is :func:`cosine_topk` (corpus
     never moves, exchange carries pool-bounded rows); the greedy loop is
     inherently sequential but runs PER QUERY over a parameter-sized
-    (pool × dim) group in one ``applyInPandas`` — queries parallelize,
-    and nothing driver-side touches data. Ties (equal MMR score) break
-    on neighbor id; the first pick is always the exact top-1.
+    (pool × dim) group in one :func:`grouped_map` call — queries
+    parallelize, and nothing driver-side touches data. Ties (equal MMR
+    score) break on neighbor id; the first pick is always the exact
+    top-1.
 
     Returns (query_id, neighbor_id, rel, mmr_rank) — rel = exact cosine.
     """
@@ -1567,9 +1567,6 @@ def mmr_rerank(
     )
 
     def pick(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            ["rel", "neighbor_id"], ascending=[False, True]
-        ).reset_index(drop=True)
         v = np.array(pdf["__nv"].tolist(), dtype=np.float64)
         norms = np.linalg.norm(v, axis=1)
         norms[norms == 0.0] = 1.0
@@ -1595,7 +1592,8 @@ def mmr_rerank(
         out["mmr_rank"] = range(1, len(chosen) + 1)
         return out
 
-    return joined.groupBy("query_id").applyInPandas(pick, out_schema)
+    order = [F.col("rel").desc(), "neighbor_id"]
+    return grouped_map(joined, "query_id", pick, out_schema, order)
 
 
 def hybrid_rrf_topk(

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_psl_spark.grouped import grouped_map
+
 
 def _flatten(df: DataFrame, wcol: str = "__w") -> DataFrame:
     return (
@@ -274,7 +276,6 @@ def ewma_anomaly(
     bucket: str = "hour",
     alpha: float = 0.25,
     threshold: float,
-    tiebreak_col: str | None = None,
 ) -> DataFrame:
     """Exponentially-weighted smoothing + residual anomaly flags over a
     per-key time series — the sequential-recurrence operator
@@ -282,12 +283,12 @@ def ewma_anomaly(
     functions cannot express (each output depends on the previous
     OUTPUT, not a frame of inputs).
 
-    The recurrence runs in one ``applyInPandas`` per key: each key's
-    bucketed series sorts locally and replays the recurrence in plain
-    float64 — row-local per key, the only shuffle is the per-key
-    aggregate's. Series length per key = time span / bucket (a bounded
-    grid, not the event count), so state per task stays small at any
-    corpus scale.
+    The recurrence runs in one :func:`grouped_map` call per key: each
+    key's bucketed series arrives in bucket order and replays the
+    recurrence in plain float64. The grouped map shuffles on the key
+    after the bucket aggregate's own shuffle. Series length per key =
+    time span / bucket (a bounded grid, not the event count), so state
+    per task stays small at any corpus scale.
 
     Determinism: the bucketed input ``x`` is an exact DECIMAL(18,2) sum
     (order-proof) cast back to double, and every recurrence step is the
@@ -316,7 +317,6 @@ def ewma_anomaly(
     thr = float(threshold)
 
     def replay(pdf):
-        pdf = pdf.sort_values("__b").reset_index(drop=True)
         s_prev = None
         sm, res, flag = [], [], []
         for x in pdf["__x"]:
@@ -334,15 +334,10 @@ def ewma_anomaly(
         pdf["__f"] = flag
         return pdf
 
-    out = xagg.groupBy("__k").applyInPandas(
-        replay,
-        schema=(
-            "__k "
-            + dict(df.dtypes)[key_col]
-            + ", __b timestamp, __x double, __s double, __r double,"
-            " __f boolean"
-        ),
-    )
+    schema = f"__k {dict(df.dtypes)[key_col]}, __b timestamp, __x double, "
+    schema += "__s double, __r double, __f boolean"
+    order = [F.col("__b").asc_nulls_last()]
+    out = grouped_map(xagg, "__k", replay, schema, order)
     return out.select(
         F.col("__k").alias(key_col),
         F.col("__b").alias("bucket_ts"),

@@ -12,6 +12,7 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 
+from flink_psl_spark.grouped import grouped_map
 from flink_psl_spark.queries.registry import query, sql_query, tables
 
 # ---------------------------------------------------------------------------
@@ -288,52 +289,35 @@ def posexplode_words(spark, sf_dir):
 )
 def cogroup_user_summary(spark, sf_dir):
     """co-group (reference DataStream.coGroup:720 / CoGroupedStreams):
-    both keyed sides of a key visit one function together — Spark's
-    ``cogroup(...).applyInPandas`` two-DataFrame form.
-
-    The key exchanges are pinned at ``defaultParallelism``: the stage's
-    cost is per-GROUP Python round trips (one function call + Arrow
-    ser/deser per key), not bytes, but AQE coalesces by BYTES — at
-    sf0.1 it folded the ~500 KiB shuffle into one partition and ran all
-    1500 group calls serially on one core (measured 4.5 s of Python
-    time in one task; ~0.5 s once spread). An explicit keyed
-    repartition is exempt from AQE coalescing, and defaultParallelism
-    is the right floor at any scale for a python-call-bound stage."""
+    both keyed sides of a key visit one function together. One scan of
+    ``events`` tags each row with its side; :func:`grouped_map` hands the
+    function each user's rows and the function splits the sides."""
     t = tables(spark, sf_dir)
-    par = spark.sparkContext.defaultParallelism
-    clicks = t["events"].where(F.col("event_type") == "click").select(
-        "user_id", "value"
-    ).repartition(par, "user_id")
-    purchases = t["events"].where(F.col("event_type") == "purchase").select(
-        "user_id", "value"
-    ).repartition(par, "user_id")
+    events = t["events"].where(
+        F.col("event_type").isin("click", "purchase")
+    ).select("user_id", "value", (F.col("event_type") == "click").alias("__click"))
 
-    def summarize(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+    def summarize(pdf: pd.DataFrame) -> pd.DataFrame:
         # dict-of-tuples construction: ~1.4x cheaper per group than the
         # list-of-dict form, and this function runs once per key
-        uid = left["user_id"].iat[0] if len(left) else right["user_id"].iat[0]
+        click = pdf["__click"].to_numpy()
+        left, right = pdf["value"][click], pdf["value"][~click]
         return pd.DataFrame(
             {
-                "user_id": (uid,),
+                "user_id": (pdf["user_id"].iat[0],),
                 "n_clicks": (len(left),),
-                "click_v": (
-                    round(float(left["value"].sum()), 3) if len(left) else 0.0,
-                ),
+                "click_v": (round(float(left.sum()), 3) if len(left) else 0.0,),
                 "n_purch": (len(right),),
-                "purch_v": (
-                    round(float(right["value"].sum()), 3) if len(right) else 0.0,
-                ),
+                "purch_v": (round(float(right.sum()), 3) if len(right) else 0.0,),
             }
         )
 
-    return (
-        clicks.groupBy("user_id")
-        .cogroup(purchases.groupBy("user_id"))
-        .applyInPandas(
-            summarize,
-            "user_id long, n_clicks long, click_v double, "
-            "n_purch long, purch_v double",
-        )
+    return grouped_map(
+        events,
+        "user_id",
+        summarize,
+        "user_id long, n_clicks long, click_v double, "
+        "n_purch long, purch_v double",
     )
 
 
@@ -351,24 +335,20 @@ def cogroup_user_summary(spark, sf_dir):
 def udtaf_top2_per_group(spark, sf_dir):
     """Table aggregate / UDTAF (reference TableAggregateFunction.java:157,
     Top2Accumulator example; PyFlink udtaf:709): a group aggregate that
-    EMITS MULTIPLE ROWS per group — applyInPandas group→many-rows."""
+    EMITS MULTIPLE ROWS per group — a :func:`grouped_map` whose function
+    returns a group's first two rows in rank order."""
     t = tables(spark, sf_dir)
 
     def top2(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = pdf.sort_values(
-            ["c_acctbal", "c_custkey"], ascending=[False, True], kind="mergesort"
-        ).head(2)
-        out = out.reset_index(drop=True)
-        out["rk"] = range(1, len(out) + 1)
-        return out[["c_nationkey", "c_custkey", "c_acctbal", "rk"]]
+        top = pdf.head(2)
+        return top.assign(rk=range(1, len(top) + 1))
 
-    return (
-        t["customer"]
-        .select("c_nationkey", "c_custkey", "c_acctbal")
-        .groupBy("c_nationkey")
-        .applyInPandas(
-            top2, "c_nationkey int, c_custkey long, c_acctbal double, rk int"
-        )
+    return grouped_map(
+        t["customer"].select("c_nationkey", "c_custkey", "c_acctbal"),
+        "c_nationkey",
+        top2,
+        "c_nationkey int, c_custkey long, c_acctbal double, rk int",
+        order=[F.col("c_acctbal").desc(), "c_custkey"],
     )
 
 

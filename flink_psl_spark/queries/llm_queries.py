@@ -3720,7 +3720,7 @@ def llm_mmr_rerank(spark, sf_dir):
     """Maximal-Marginal-Relevance diverse top-5 (λ=0.7 over an exact
     top-50 pool): dedup-aware retrieval — trades 30% of raw relevance
     for coverage so near-identical neighbors don't crowd the result.
-    Per-query greedy runs in one applyInPandas over a parameter-sized
+    Per-query greedy runs as one grouped-map call over a parameter-sized
     group; queries parallelize."""
     from flink_psl_spark.llm import cosine_topk, mmr_rerank
 

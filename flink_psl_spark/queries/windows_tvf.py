@@ -474,7 +474,7 @@ def timeseries_ewma_anomaly(spark, sf_dir):
     """EWMA smoothing + residual anomaly flags per event type over the
     daily value series — the sequential recurrence (each output depends
     on the previous OUTPUT) that window frames cannot express, run as
-    one applyInPandas replay per key over the bounded bucket grid."""
+    one grouped-map replay per key over the bounded bucket grid."""
     from flink_psl_spark.operators.windows import ewma_anomaly
 
     t = tables(spark, sf_dir)

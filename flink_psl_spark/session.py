@@ -38,7 +38,7 @@ RUNTIME_SQL_CONF: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Deterministic time semantics (reference TIMESTAMP is naive; we pin UTC).
     "spark.sql.session.timeZone": "UTC",
-    # Arrow batching for every pandas UDF / applyInPandas hop.
+    # Arrow batching for every pandas UDF / mapInPandas hop.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Python UDTFs too: ArrowEvalPythonUDTF instead of row-at-a-time
     # BatchEvalPythonUDTF (same rows, vectorized transfer).

@@ -111,10 +111,10 @@ def run_to_memory_table(
     8 — measured 2.6× on the interval join vs 32). ``shuffle_partitions``
     overrides per query: JVM-native state-heavy replays (stream-stream
     joins) measure another ~30% faster and less variable at 4, while
-    Python-stateful operators (applyInPandas) want the worker parallelism
-    of 8 — so the knob is per-call, not global. Production pipelines size
-    shuffle partitions to their cluster before starting the query (the
-    count is then fixed by the checkpoint).
+    Python-stateful operators (applyInPandasWithState) want the worker
+    parallelism of 8 — so the knob is per-call, not global. Production
+    pipelines size shuffle partitions to their cluster before starting
+    the query (the count is then fixed by the checkpoint).
 
     ``final_nodata_batch=False`` skips the trailing no-data micro-batch
     (``spark.sql.streaming.noDataMicroBatches.enabled``) — that batch

@@ -284,3 +284,19 @@ def test_session_sees_base_udfs_and_views(client, spark):
     )
     assert client.fetch_all(h, op) == (["y"], [[1], [2], [3]])
     client.close_session(h)
+
+
+def test_opening_properties_are_set_like_set_statements(gateway, client):
+    """Opening properties are set on the session as SET sets them: a
+    Flink-style key reads back, and a static Spark key fails the open with
+    Spark's error instead of being dropped while the session opens."""
+    h = client.open_session({"pipeline.name": "gw-props"})
+    assert _value(client, h, "pipeline.name") == "gw-props"
+    client.close_session(h)
+
+    n_sessions = len(gateway.service.sessions)
+    with pytest.raises(HTTPError) as ei:
+        client.open_session({"spark.sql.warehouse.dir": "/tmp/elsewhere"})
+    assert ei.value.code == 500
+    assert "CANNOT_MODIFY_STATIC_CONFIG" in ei.value.read().decode()
+    assert len(gateway.service.sessions) == n_sessions

@@ -4,6 +4,8 @@ choices — not brittle full-text snapshots)."""
 
 from __future__ import annotations
 
+import pytest
+
 from pyspark.sql import functions as F
 
 
@@ -599,7 +601,7 @@ def test_pagerank_iteration_single_shuffle(spark, t):
 
 def test_embedding_dedup_exact_is_tiled_not_pair_joined(spark, t):
     """Exact all-pairs embedding dedup runs as tile-blocked per-task
-    matmuls (FlatMapGroupsInPandas over (ti, tj) tiles): ONE shuffle of
+    matmuls (a grouped map over (ti, tj) tiles): ONE shuffle of
     n x n_blocks replicated rows — no nested-loop pair join, and no
     per-pair zip_with dot (the pre-fix plan paid an array allocation per
     pair, ~18 us x n²/2 — 37 s at sf0.1; the tiled form is ~1.4 s)."""
@@ -607,7 +609,7 @@ def test_embedding_dedup_exact_is_tiled_not_pair_joined(spark, t):
 
     out = QUERIES["llm_embedding_dedup"](spark, "/root/testdata/sf0.001")
     p = _plan(out)
-    assert "FlatMapGroupsInPandas" in p     # the tile kernel
+    assert "MapInPandas" in p               # the tile kernel
     assert "NestedLoop" not in p            # no pair join anywhere
     assert "zip_with" not in p              # no per-pair expression dot
 
@@ -665,3 +667,35 @@ def test_language_id_plan_is_linear_in_profiles(spark, t):
     assert p.count("split(") == 1      # one tokenization in the whole plan
     assert "array_max" in p            # the linear argmax form
     assert len(p) < 20_000             # pre-fix plans were ~100x this
+
+
+# query -> (grouped-map nodes, most hash exchanges): the exchange bounds are
+# the counts the per-group applyInPandas / cogroup forms planned at sf0.001
+GROUPED_MAP_QUERIES = {
+    "cogroup_user_summary": (1, 1),
+    "udtaf_top2_per_group": (1, 1),
+    "timeseries_ewma_anomaly": (1, 2),
+    "llm_embedding_dedup": (1, 2),
+    "llm_mmr_rerank": (1, 6),
+    # two aggregates read the packed frame, and each plans its own map
+    "llm_bfd_packing": (2, 5),
+}
+
+
+@pytest.mark.parametrize("name", sorted(GROUPED_MAP_QUERIES))
+def test_grouped_map_sites_run_one_batched_map(spark, sf_dir, name):
+    """Per-key pandas functions run as grouped_map's one MapInPandas over
+    key-sorted partitions, never as a per-group FlatMap(Co)GroupsInPandas,
+    and the batched form adds no exchange."""
+    from flink_psl_spark.queries import QUERIES
+
+    maps, max_exchanges = GROUPED_MAP_QUERIES[name]
+    df = QUERIES[name](spark, sf_dir)
+    p = _plan(df)
+    assert "FlatMapGroupsInPandas" not in p
+    assert "FlatMapCoGroupsInPandas" not in p
+    assert p.count("MapInPandas") == maps
+    assert _exchanges(df) <= max_exchanges
+    if name == "cogroup_user_summary":
+        # one scan of events feeds both sides of the co-group
+        assert p.count("FileScan") == 1

@@ -55,6 +55,7 @@ def _conf_writes() -> set[tuple[str, str, str, bool]]:
 
 def test_only_set_reset_and_replay_start_write_session_conf():
     assert _conf_writes() == {
+        ("gateway.py", "open_session", "set", False),
         ("sql_client.py", "_execute_entry", "set", False),
         ("sql_client.py", "_execute_entry", "unset", False),
         ("streaming/core.py", "run_to_memory_table", "set", True),
